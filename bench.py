@@ -419,10 +419,12 @@ MAX_LINE_CHARS = 1800
 
 
 def bounded_line(payload: dict) -> dict:
-    """Trim ``payload["queries"]`` (slowest-first) until the serialized
-    line fits MAX_LINE_CHARS. Full map is in BENCH_LOCAL.json."""
-    timings = payload["queries"]
-    by_cost = sorted(timings, key=timings.get, reverse=True)
+    """Trim ``payload["queries"]`` (slowest-first, timings to one
+    decimal) until the serialized line fits MAX_LINE_CHARS. Full map is
+    in BENCH_LOCAL.json."""
+    raw = payload["queries"]
+    timings = {n: round(t, 1) for n, t in raw.items()}
+    by_cost = sorted(raw, key=raw.get, reverse=True)
     keep = len(by_cost)
     while keep > 0:
         out = {

@@ -54,13 +54,14 @@ def ohlc_aggregates(
     """The five OHLCV aggregate expressions plus trade count."""
     if mode == "efficient":
         # min_by/max_by with a (ts, price) struct ORDERING KEY: same
-        # lexicographic tie-breaks as struct-min/max, but it is a
-        # TypedImperativeAggregate, so the planner uses ObjectHashAggregate
-        # instead of falling back to SortAggregate (struct-valued min/max
-        # is not hash-aggregable) — no per-partition sort, ~20% faster at
-        # sf0.1 and growing with rows/partition. Duplicate (ts, price)
-        # keys all carry the same price value, so the arbitrary row choice
-        # among exact key ties is still deterministic in the output.
+        # lexicographic tie-breaks as struct-min/max. Their buffer holds
+        # that struct, which is not hash-aggregable, so every aggregation
+        # step plans as SortAggregate (a sort per partition): partial and
+        # final in batch; partial, a merge on each side of the state
+        # store, and final in the streaming candle query. Duplicate
+        # (ts, price) keys all carry the same price value, so the
+        # arbitrary row choice among exact key ties is still
+        # deterministic in the output.
         open_ = F.min_by(price_col, _ts_price(ts_col, price_col))
         close_ = F.max_by(price_col, _ts_price(ts_col, price_col))
     elif mode == "faithful":

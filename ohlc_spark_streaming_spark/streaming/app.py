@@ -16,6 +16,7 @@ once per query only where Spark requires it.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -51,15 +52,19 @@ def build_app(
     window_duration: str = "1 minute",
     watermark_delay: str = "2 minutes",
     with_taps: bool = True,
-    sink_format: str = "memory",
+    sink_format: str | Callable[[DataFrame, int], None] = "memory",
     available_now: bool = False,
 ) -> TradeCandleApp:
     """Start the full candle application over a wire-format stream
     (columns: ``topic``, ``value``). Returns running query handles.
 
     ``sink_format='memory'`` makes every sink an assertable table
-    (candles_out, tap_trades, tap_raw); production passes ``kafka`` plus
-    the broker options via the returned writers instead.
+    (candles_out, tap_trades, tap_raw). A callable ``sink_format`` is a
+    test hook: it becomes every query's ``foreachBatch`` function, so a
+    test can stop the app and restart it from its checkpoint, which
+    Spark refuses for the memory sink in update mode. No sink options
+    are passed, so a Kafka sink (which needs broker options) is not
+    wired here.
     """
     spark = wire.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -82,11 +87,14 @@ def build_app(
 
         def _start(df: DataFrame, name: str, mode: str) -> StreamingQuery:
             w = (
-                df.writeStream.format(sink_format)
-                .queryName(name)
+                df.writeStream.queryName(name)
                 .outputMode(mode)
                 .option("checkpointLocation", checkpoints.path_for(name))
             )
+            if callable(sink_format):
+                w = w.foreachBatch(sink_format)
+            else:
+                w = w.format(sink_format)
             if available_now:
                 w = w.trigger(availableNow=True)
             return w.start()

@@ -68,27 +68,31 @@ def streaming_ohlc_candles(
 
 
 def stream_state_partitions() -> int:
-    """Shuffle-partition count for stateful streaming queries.
+    """Shuffle-partition count, and so state-store count, for stateful
+    streaming queries: one store per 2 cores up to 4 stores, then one per
+    8 cores (local[1] and local[2] get 1, local[4] 2, local[8] to
+    local[32] 4, a 1000-core cluster 125).
 
-    Stateful operators pay a per-partition state-store cost (open, delta
-    write, snapshot maintenance) every micro-batch, so the partition count
-    should track state volume, not core count: cores/8 with a floor of 4
-    (local[32] → 4 stores; a 1000-core cluster → 125; measured best on the
-    bench corpus — 8 stores cost ~2x the wall time of 4 at sf0.1 state
-    sizes). Batch queries keep the full ``spark.sql.shuffle.partitions``.
-    Override with ``SPARK_GRAFT_STREAM_PARTITIONS``.
+    Each store writes one checkpoint delta file per micro-batch, however
+    little state it holds. On a 4-core VM without the Hadoop native
+    library a write costs about 30 ms (setting the file's permissions
+    forks ``chmod``): the candle app's 150 state rows took 310-330 ms of
+    commit time per batch in 4 stores, 100 ms in 2 and 30 ms in 1. But
+    one task updates and emits all of a store's rows, so few stores
+    serialize a batch that writes much state: at 4 cores
+    ``streaming_session_funnel`` (69k session rows in one batch) ran
+    1.2-1.3x slower in 1 store than in 4, and 5-11% slower in 2 (inside
+    the run-to-run spread). The count is fixed when the checkpoint is
+    created, before the state size is known, so it cannot follow it.
+    Counts from 8 cores up are the earlier ``max(4, cores // 8)``.
+
+    Batch queries keep the full ``spark.sql.shuffle.partitions``, and a
+    restarted query keeps the count its checkpoint was started with.
     """
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        try:
-            return max(1, int(env))
-        except ValueError:
-            pass
     from ..session import default_parallelism
 
-    return max(4, default_parallelism() // 8)
+    cores = default_parallelism()
+    return max(1, min(4, cores // 2), cores // 8)
 
 
 def run_to_memory(
@@ -107,10 +111,11 @@ def run_to_memory(
     ``spark.sql.shuffle.partitions`` is narrowed to
     :func:`stream_state_partitions` for the duration of the start (the
     value is captured into the query's checkpoint at planning time), then
-    restored so batch queries keep their own sizing. Queries whose
-    stateful stage runs PYTHON (applyInPandasWithState) should pass an
-    explicit ``partitions`` near the core count instead — their cost is
-    Python-worker parallelism, not state-store count (measured: the
+    restored so batch queries keep their own sizing: each state store
+    costs one checkpoint write per micro-batch. Queries whose stateful
+    stage runs PYTHON (applyInPandasWithState) should pass an explicit
+    ``partitions`` near the core count instead — their cost is
+    Python-worker parallelism, not checkpoint writes (measured: the
     stateful counter is 2x slower at 4 partitions than at 16).
     """
     spark = stream_df.sparkSession

@@ -660,7 +660,7 @@ def q_pyds_stream_tick_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     connector+stream path, which the reference's console sink never
     could (/root/reference/main.py:90-99)."""
     from ..sources.python_ds import register_tick_source
-    from ..streaming.candles import stream_state_partitions
+    from ..streaming.checkpoints import stream_start
 
     register_tick_source(spark)
     ticks = (
@@ -677,20 +677,16 @@ def q_pyds_stream_tick_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum(cents).cast("double") / F.lit(100.0)).alias("total"),
     )
     name = f"pyds_stream_{next(_counter)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(stream_state_partitions()))
-    try:
+    with stream_start(spark, None):
         query = (
             agg.writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
             .start()
         )
-        query.processAllAvailable()
-        query.stop()
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    query.processAllAvailable()
+    query.stop()
+    query.awaitTermination()
     return spark.table(name)
 
 

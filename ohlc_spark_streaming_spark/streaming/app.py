@@ -23,8 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.trades import serialize_candles, trades_from_wire
-from .candles import stream_state_partitions, streaming_ohlc_candles
-from .checkpoints import CheckpointManager
+from .candles import streaming_ohlc_candles
+from .checkpoints import CheckpointManager, stream_start
 
 
 @dataclass
@@ -66,44 +66,37 @@ def build_app(
     are passed, so a Kafka sink (which needs broker options) is not
     wired here.
     """
-    spark = wire.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(stream_state_partitions()))
-    try:
-        trades = trades_from_wire(wire)
-        trades_ts = trades.withColumn(
-            "timestamp", trades["timestamp"].cast("timestamp")
-        )
-        candles = streaming_ohlc_candles(
-            trades_ts,
-            ts_col="timestamp",
-            symbol_col="base",
-            price_col="price",
-            qty_col="quantity",
-            window_duration=window_duration,
-            watermark_delay=watermark_delay,
-        )
-        out_rows = serialize_candles(candles, output_prefix)
+    trades = trades_from_wire(wire)
+    trades_ts = trades.withColumn("timestamp", trades["timestamp"].cast("timestamp"))
+    candles = streaming_ohlc_candles(
+        trades_ts,
+        ts_col="timestamp",
+        symbol_col="base",
+        price_col="price",
+        qty_col="quantity",
+        window_duration=window_duration,
+        watermark_delay=watermark_delay,
+    )
+    out_rows = serialize_candles(candles, output_prefix)
 
-        def _start(df: DataFrame, name: str, mode: str) -> StreamingQuery:
-            w = (
-                df.writeStream.queryName(name)
-                .outputMode(mode)
-                .option("checkpointLocation", checkpoints.path_for(name))
-            )
-            if callable(sink_format):
-                w = w.foreachBatch(sink_format)
-            else:
-                w = w.format(sink_format)
-            if available_now:
-                w = w.trigger(availableNow=True)
-            return w.start()
+    def _start(df: DataFrame, name: str, mode: str) -> StreamingQuery:
+        w = (
+            df.writeStream.queryName(name)
+            .outputMode(mode)
+            .option("checkpointLocation", checkpoints.path_for(name))
+        )
+        if callable(sink_format):
+            w = w.foreachBatch(sink_format)
+        else:
+            w = w.format(sink_format)
+        if available_now:
+            w = w.trigger(availableNow=True)
+        return w.start()
 
+    with stream_start(wire.sparkSession, checkpoints.root):
         candle_q = _start(out_rows, "candles_out", "update")
         taps: list[StreamingQuery] = []
         if with_taps:
             taps.append(_start(wire.select("topic", "value"), "tap_raw", "append"))
             taps.append(_start(trades, "tap_trades", "append"))
-        return TradeCandleApp(candle_query=candle_q, tap_queries=taps)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return TradeCandleApp(candle_query=candle_q, tap_queries=taps)

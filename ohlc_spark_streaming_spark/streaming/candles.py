@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.ohlc import ohlc_aggregates
+from .checkpoints import stream_start
 
 
 def streaming_ohlc_candles(
@@ -73,18 +74,17 @@ def stream_state_partitions() -> int:
     8 cores (local[1] and local[2] get 1, local[4] 2, local[8] to
     local[32] 4, a 1000-core cluster 125).
 
-    Each store writes one checkpoint delta file per micro-batch, however
-    little state it holds. On a 4-core VM without the Hadoop native
-    library a write costs about 30 ms (setting the file's permissions
-    forks ``chmod``): the candle app's 150 state rows took 310-330 ms of
-    commit time per batch in 4 stores, 100 ms in 2 and 30 ms in 1. But
-    one task updates and emits all of a store's rows, so few stores
-    serialize a batch that writes much state: at 4 cores
-    ``streaming_session_funnel`` (69k session rows in one batch) ran
-    1.2-1.3x slower in 1 store than in 4, and 5-11% slower in 2 (inside
-    the run-to-run spread). The count is fixed when the checkpoint is
-    created, before the state size is known, so it cannot follow it.
-    Counts from 8 cores up are the earlier ``max(4, cores // 8)``.
+    Each store writes one checkpoint delta file per micro-batch. Local
+    checkpoints use the rename-based checkpoint file manager
+    (:mod:`.checkpoints`), where a write costs a few milliseconds: the
+    candle app's commit in 2 stores takes about 6 ms per batch. One task
+    updates and emits all of a store's rows, so few stores serialize a
+    batch that writes much state. At 4 cores, 1 / 2 / 4 stores took
+    9.8 / 10.3 / 11.5 s on the candle replay benchmark and 1.19 / 1.01 /
+    0.92 s on ``streaming_session_funnel`` (69k session rows in one
+    batch). The count is fixed when the checkpoint is created, before the
+    state size is known, so it cannot follow it. Counts from 8 cores up
+    are the earlier ``max(4, cores // 8)``.
 
     Batch queries keep the full ``spark.sql.shuffle.partitions``, and a
     restarted query keeps the count its checkpoint was started with.
@@ -108,23 +108,16 @@ def run_to_memory(
     processes all available input then stops, so the memory table holds the
     stream's final answer. Spark session must own the stream's source.
 
-    ``spark.sql.shuffle.partitions`` is narrowed to
-    :func:`stream_state_partitions` for the duration of the start (the
-    value is captured into the query's checkpoint at planning time), then
-    restored so batch queries keep their own sizing: each state store
-    costs one checkpoint write per micro-batch. Queries whose stateful
-    stage runs PYTHON (applyInPandasWithState) should pass an explicit
-    ``partitions`` near the core count instead — their cost is
-    Python-worker parallelism, not checkpoint writes (measured: the
-    stateful counter is 2x slower at 4 partitions than at 16).
+    The query starts under :func:`~.checkpoints.stream_start`, in
+    :func:`stream_state_partitions` state stores unless ``partitions`` is
+    given. Queries whose stateful stage runs PYTHON
+    (applyInPandasWithState) should pass ``partitions`` near the core
+    count: their cost is Python-worker parallelism, not the stores
+    (measured: the stateful counter is 2x slower at 4 partitions than at
+    16).
     """
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(partitions if partitions else stream_state_partitions()),
-    )
-    try:
+    with stream_start(spark, None, partitions):
         query = (
             stream_df.writeStream.format("memory")
             .queryName(table_name)
@@ -132,7 +125,5 @@ def run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    query.awaitTermination()
     return spark.table(table_name)

@@ -1,9 +1,27 @@
-"""Checkpoint path management (reference: /root/reference/main.py:201-206).
+"""Checkpoint paths and stream-start confs (reference main.py:201-206).
 
 The reference isolates each streaming query's checkpoint under a per-query
 subdirectory to avoid collisions; we generalize that into a tiny manager so
 every named query gets a stable, isolated path. Stable paths are what make
 exactly-once-ish recovery work: offsets + state are journaled per query.
+
+Every micro-batch writes an offset-log entry, a commit-log entry, the file
+source's metadata-log entry and one delta file per state store. Which
+checkpoint file manager writes them is chosen here, by :func:`stream_start`,
+the one place that sets stream-start confs:
+
+* A checkpoint that resolves to the local ``file`` scheme (a
+  :class:`CheckpointManager` root, an :func:`ephemeral_checkpoint`, the
+  memory sink's temp checkpoint under the default ``fs.defaultFS``) uses
+  Spark's ``FileSystemBasedCheckpointFileManager``: write a temp file, then
+  rename it into place. Rename is atomic on a local filesystem. Spark's
+  default, ``FileContextBasedCheckpointFileManager``, sets each file's
+  permissions through Hadoop's local filesystem, which forks ``chmod``
+  when the Hadoop native library is absent: tens of milliseconds per
+  write, several writes per micro-batch.
+* HDFS and object-store roots (``hdfs://``, ``s3a://``, ...) keep Spark's
+  FileContext default. ``FileSystem.rename`` is not atomic on object
+  stores, so a crash mid-rename could leave a partial log entry.
 """
 
 from __future__ import annotations
@@ -12,6 +30,15 @@ import contextlib
 import os
 import shutil
 import tempfile
+from urllib.parse import urlsplit
+
+#: Spark's rename-based checkpoint file manager, used for local roots.
+RENAME_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+PARTITIONS_CONF = "spark.sql.shuffle.partitions"
 
 
 class CheckpointManager:
@@ -47,17 +74,67 @@ def ephemeral_checkpoint(name: str):
         shutil.rmtree(path, ignore_errors=True)
 
 
+def is_local_checkpoint(path: str, default_fs: str) -> bool:
+    """True when ``path`` resolves to the local ``file`` scheme. A path
+    without a scheme resolves against ``default_fs`` (Hadoop's
+    ``fs.defaultFS``), as Spark resolves a checkpoint root. A string
+    check only: it touches no filesystem."""
+    return (urlsplit(path).scheme or urlsplit(default_fs).scheme) == "file"
+
+
+@contextlib.contextmanager
+def stream_start(spark, checkpoint: str | None, partitions: int | None = None):
+    """Set the stream-start confs while the body calls
+    ``writeStream.start()``, then restore them (unsetting any that were
+    unset). The started query keeps them: ``start()`` clones the session
+    and opens the checkpoint logs.
+
+    * ``spark.sql.shuffle.partitions``: ``partitions``, or else
+      :func:`~.candles.stream_state_partitions`; the checkpoint records
+      it as the query's state-store count.
+    * ``spark.sql.streaming.checkpointFileManagerClass``: the rename-based
+      manager, only when ``checkpoint`` resolves to a local path. ``None``
+      is the memory sink's checkpoint: the session's default checkpoint
+      root if set, else a local temp directory, resolved like any path.
+    """
+    from .candles import stream_state_partitions
+
+    confs = {PARTITIONS_CONF: str(partitions or stream_state_partitions())}
+    if checkpoint is None:
+        checkpoint = spark.conf.get("spark.sql.streaming.checkpointLocation", "")
+    default_fs = (
+        spark._jsparkSession.sessionState().newHadoopConf().get("fs.defaultFS")
+    )
+    if is_local_checkpoint(checkpoint, default_fs):
+        confs[MANAGER_CONF] = RENAME_MANAGER
+    prev = {key: spark.conf.get(key, None) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
 def run_foreach_batch(stream_df, batch_fn, name: str) -> None:
     """Run a bounded stream through ``foreachBatch`` to completion under
     an ephemeral checkpoint — the shared driver for every fold-style
     registry query (incremental candles, as-of enrich, rolling actives).
-    One site owns the writeStream wiring AND the cleanup contract."""
+    One site owns the writeStream wiring AND the cleanup contract. The
+    folds keep no streaming state, and their batch work keeps the
+    session's shuffle-partition count."""
+    spark = stream_df.sparkSession
     with ephemeral_checkpoint(name) as ckpt:
-        query = (
-            stream_df.writeStream.foreachBatch(batch_fn)
-            .queryName(name)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+        with stream_start(spark, ckpt, int(spark.conf.get(PARTITIONS_CONF))):
+            query = (
+                stream_df.writeStream.foreachBatch(batch_fn)
+                .queryName(name)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
         query.awaitTermination()

@@ -98,22 +98,24 @@ def test_ckpt_raw_lint_flags_violations(tmp_path):
     import pathlib
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    sys.path.insert(0, str(repo))
     import tools_lint
 
     assert tools_lint.lint_checkpoint_hygiene() == []
-    # Plant a violation inside the package, confirm it is flagged.
-    pkg = pathlib.Path("/root/repo/ohlc_spark_streaming_spark")
-    rogue = pkg / "_ckpt_lint_probe.py"
-    rogue.write_text(
-        'OPT = "checkpointLocation"  # planted by test_round10_helpers\n'
-    )
-    try:
-        findings = tools_lint.lint_checkpoint_hygiene()
-        assert any(
-            code == "CKPT_RAW" and "_ckpt_lint_probe" in msg
-            for _, code, msg in findings
-        )
-    finally:
-        rogue.unlink()
+    # Plant violations inside the package, confirm each is flagged.
+    pkg = repo / "ohlc_spark_streaming_spark"
+    for probe, line in [
+        ("_ckpt_lint_probe", 'OPT = "checkpointLocation"'),
+        ("_ckpt_manager_probe", 'CONF = "checkpointFileManagerClass"'),
+    ]:
+        rogue = pkg / f"{probe}.py"
+        rogue.write_text(f"{line}  # planted by test_round10_helpers\n")
+        try:
+            findings = tools_lint.lint_checkpoint_hygiene()
+            assert any(
+                code == "CKPT_RAW" and probe in msg for _, code, msg in findings
+            )
+        finally:
+            rogue.unlink()
     assert tools_lint.lint_checkpoint_hygiene() == []

@@ -140,6 +140,8 @@ CKPT_ALLOWED = {
     "sinks/kafka.py",
     "sinks/files.py",
 }
+#: The one file allowed to name the checkpoint file manager conf.
+CKPT_MANAGER_OWNER = "streaming/checkpoints.py"
 
 
 def lint_checkpoint_hygiene() -> list[tuple[str, str, str]]:
@@ -147,19 +149,22 @@ def lint_checkpoint_hygiene() -> list[tuple[str, str, str]]:
     checkpoint-prefixed mkdtemp outside the allowlist is an error —
     query code must route through streaming/checkpoints.py's
     ephemeral_checkpoint / run_foreach_batch so the leak fix of c09363f
-    stays structural rather than per-site (VERDICT r9 item 8)."""
+    stays structural rather than per-site (VERDICT r9 item 8). Naming
+    ``checkpointFileManagerClass`` anywhere but streaming/checkpoints.py
+    is an error too: ``stream_start`` alone picks the manager."""
     import pathlib
 
     pkg = pathlib.Path(__file__).parent / "ohlc_spark_streaming_spark"
     bad: list[tuple[str, str, str]] = []
     for path in sorted(pkg.rglob("*.py")):
         rel = path.relative_to(pkg).as_posix()
-        if rel in CKPT_ALLOWED:
-            continue
         for ln, line in enumerate(path.read_text().splitlines(), 1):
             raw_opt = "checkpointLocation" in line
             raw_dir = "mkdtemp" in line and "ckpt" in line
-            if raw_opt or raw_dir:
+            raw_manager = "checkpointFileManagerClass" in line
+            if (rel not in CKPT_ALLOWED and (raw_opt or raw_dir)) or (
+                rel != CKPT_MANAGER_OWNER and raw_manager
+            ):
                 bad.append(
                     (
                         rel,

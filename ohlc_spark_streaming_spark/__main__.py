@@ -78,15 +78,19 @@ def main(argv: list[str] | None = None) -> int:
               f"{cfg.kafka_subscribe_topics!r}; not starting streams")
         spark.stop()
         return 0
-    app = build_app(
+    # The reference's console taps are debug output, and the raw tap
+    # would write each input message back into its own topic.
+    build_app(
         wire,
         CheckpointManager(cfg.checkpoint_location),
         output_prefix=cfg.kafka_output_prefix,
         window_duration=cfg.window_duration,
         watermark_delay=cfg.watermark_delay,
+        with_taps=False,
         sink_format="kafka",
+        sink_options={"kafka.bootstrap.servers": cfg.kafka_bootstrap_servers},
     )
-    app.await_any()
+    spark.streams.awaitAnyTermination()
     return 0
 
 

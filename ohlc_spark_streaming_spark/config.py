@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 #: The reference's eight env vars, all required at deploy time
 #: (entrypoint.sh:7-14).
@@ -57,7 +57,6 @@ class AppConfig:
     checkpoint_location: str
     window_duration: str
     watermark_delay: str
-    extra: dict[str, str] = field(default_factory=dict)
 
     @property
     def subscribe_kind(self) -> str:

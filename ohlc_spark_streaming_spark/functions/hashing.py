@@ -54,14 +54,6 @@ def rolling_hash_sql(expr: str) -> str:
     )
 
 
-def minhash_exprs(token_hash: Column) -> list[Column]:
-    """The k per-token hash values; min-aggregate each to get the signature."""
-    return [
-        ((F.lit(a) * token_hash + F.lit(b)) % P).alias(f"mh{i}")
-        for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-    ]
-
-
 def minhash_sql(token_hash_expr: str) -> list[str]:
     return [
         f"min(({a} * {token_hash_expr} + {b}) % {P})"

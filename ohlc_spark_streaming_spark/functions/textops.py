@@ -26,10 +26,6 @@ def tokens(col) -> Column:
     return F.split(c, " ")
 
 
-def distinct_tokens(col) -> Column:
-    return F.array_distinct(tokens(col))
-
-
 def shingles(col, n: int = 3) -> Column:
     """Token n-grams (shingles) as space-joined strings — the MinHash /
     Jaccard input unit. Sliding slice over the token array; documents
@@ -80,12 +76,3 @@ def trigrams_col(toks: Column) -> Column:
         ),
     ).otherwise(F.array().cast("array<string>"))
 
-
-def stopword_count(col) -> Column:
-    in_list = ", ".join(f"'{w}'" for w in STOPWORDS)
-    toks = tokens(col)
-    return F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-
-
-def stopwords_sql_list() -> str:
-    return "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"

@@ -706,15 +706,6 @@ def _signature_cols(units: Column) -> list[Column]:
     ]
 
 
-def minhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-document MinHash signature (k values) over shingle hashes."""
-    return shingle_sets(docs, id_col, text_col).select(
-        id_col, *_signature_cols(F.col("units"))
-    )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",

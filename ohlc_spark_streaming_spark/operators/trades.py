@@ -4,7 +4,8 @@ Reference stages (all in ``/root/reference/main.py``):
 
 * P2  JSON parse:      ``select(topic, from_json(cast(value as string), schema))``
   (``main.py:102-105``),
-* P3  struct expansion (``main.py:109``),
+* P3  struct expansion (``main.py:109``) — folded into P4, which reads
+  the struct's fields directly,
 * P4  typed projection: string→long→timestamp for ``timestamp``,
   string→double for ``price``/``quantity`` (``main.py:119-126``),
 * P5  null guard: rows whose timestamp fails to parse are dropped
@@ -46,11 +47,6 @@ def parse_trades(raw: DataFrame, schema: T.StructType = TRADE_WIRE_SCHEMA) -> Da
         F.col("topic"),
         F.from_json(F.col("value").cast("string"), schema).alias("data"),
     )
-
-
-def expand_trades(parsed: DataFrame) -> DataFrame:
-    """P3: star-expand the parsed struct (main.py:109)."""
-    return parsed.selectExpr("topic", "data.*")
 
 
 def typed_trades(parsed: DataFrame) -> DataFrame:

@@ -5,7 +5,7 @@ are needed for this engine (SURVEY §4.3) — but plans can still silently
 regress (a join flips to cartesian, a filter stops reaching the scan, an
 unbounded collect_list sneaks into an aggregate). The linter inspects the
 executed plan and reports scale hazards; CI asserts the registry's
-headline queries stay clean (tests/test_plan_linter.py).
+headline queries stay clean (tests/test_registry_oracle.py).
 
 Each finding is ``(severity, code, message)``; severity is ``error`` for
 certain scale-breakers and ``info`` for patterns that are fine in bounded

@@ -16,7 +16,7 @@ once per query only where Spark requires it.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -29,16 +29,10 @@ from .checkpoints import CheckpointManager, stream_start
 
 @dataclass
 class TradeCandleApp:
-    """Handles for the started queries; `await_any` mirrors main.py:221."""
+    """Handles for the started queries."""
 
     candle_query: StreamingQuery
     tap_queries: list[StreamingQuery]
-
-    def await_any(self) -> None:
-        spark = None
-        for q in [self.candle_query, *self.tap_queries]:
-            spark = q.sparkSession if hasattr(q, "sparkSession") else spark
-        (spark or self.candle_query.sparkSession).streams.awaitAnyTermination()
 
     def stop(self) -> None:
         for q in [self.candle_query, *self.tap_queries]:
@@ -54,6 +48,7 @@ def build_app(
     with_taps: bool = True,
     sink_format: str | Callable[[DataFrame, int], None] = "memory",
     available_now: bool = False,
+    sink_options: Mapping[str, str] | None = None,
 ) -> TradeCandleApp:
     """Start the full candle application over a wire-format stream
     (columns: ``topic``, ``value``). Returns running query handles.
@@ -62,9 +57,11 @@ def build_app(
     (candles_out, tap_trades, tap_raw). A callable ``sink_format`` is a
     test hook: it becomes every query's ``foreachBatch`` function, so a
     test can stop the app and restart it from its checkpoint, which
-    Spark refuses for the memory sink in update mode. No sink options
-    are passed, so a Kafka sink (which needs broker options) is not
-    wired here.
+    Spark refuses for the memory sink in update mode.
+    ``sink_options`` are writer options for every query's sink: the
+    deployment passes ``kafka.bootstrap.servers`` with
+    ``sink_format='kafka'``. The memory and ``foreachBatch`` sinks need
+    none.
     """
     trades = trades_from_wire(wire)
     trades_ts = trades.withColumn("timestamp", trades["timestamp"].cast("timestamp"))
@@ -84,6 +81,7 @@ def build_app(
             df.writeStream.queryName(name)
             .outputMode(mode)
             .option("checkpointLocation", checkpoints.path_for(name))
+            .options(**(sink_options or {}))
         )
         if callable(sink_format):
             w = w.foreachBatch(sink_format)

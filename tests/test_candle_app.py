@@ -308,3 +308,49 @@ def test_candle_app_survives_sigkill(tmp_path, spark):
         .collect()
     )
     assert _final_candles([tuple(r) for r in emitted]) == _batch_candles(spark, tape)
+
+
+def test_main_runs_the_deployed_app(monkeypatch, tmp_path, spark):
+    """``python -m ohlc_spark_streaming_spark`` end to end from its eight
+    env vars, with a file stream for the Kafka source and the memory sink
+    for the Kafka sink: the sink gets the env's bootstrap servers, no
+    debug tap starts, candles come out, and ``main`` returns 0 once the
+    candle query ends."""
+    from ohlc_spark_streaming_spark import __main__ as entry
+    from ohlc_spark_streaming_spark.sources import kafka
+    from ohlc_spark_streaming_spark.streaming import app
+
+    from .test_config import GOOD_ENV
+
+    tape = str(tmp_path / "tape")
+    os.makedirs(tape)
+    _write_tape_files(tape, 0, _wire_tape(n_files=2, trades_per_file=20))
+    env = {**GOOD_ENV, "CHECKPOINT_LOCATION": str(tmp_path / "ckpts")}
+    for key, value in env.items():
+        monkeypatch.setenv(key, value)
+    monkeypatch.setattr(
+        kafka,
+        "kafka_stream_reader",
+        lambda spark, **_: spark.readStream.schema(WIRE_SCHEMA)
+        .format("json")
+        .option("path", tape),
+    )
+    calls = []
+
+    def memory_build_app(*args, **kwargs):
+        calls.append(kwargs)
+        assert kwargs["sink_format"] == "kafka"
+        return build_app(
+            *args, **{**kwargs, "sink_format": "memory", "available_now": True}
+        )
+
+    monkeypatch.setattr(app, "build_app", memory_build_app)
+    spark.streams.resetTerminated()
+    assert entry.main([]) == 0
+    [kwargs] = calls
+    assert kwargs["sink_options"] == {
+        "kafka.bootstrap.servers": env["KAFKA_BOOTSTRAP_SERVERS"]
+    }
+    assert kwargs["with_taps"] is False
+    assert not spark.streams.active
+    assert spark.table("candles_out").count() > 0

@@ -1,5 +1,5 @@
-"""Plan linter: detects scale hazards, and the registry's headline batch
-queries stay hazard-free."""
+"""Plan linter: detects scale hazards. The registry's own queries are
+linted in their per-query cases (tests/test_registry_oracle.py)."""
 
 from __future__ import annotations
 
@@ -10,60 +10,6 @@ from ohlc_spark_streaming_spark.registry import QUERIES
 from ohlc_spark_streaming_spark.sources.batch import load_table
 
 from .conftest import SF_SMOKE
-
-# Batch headline queries expected hazard-free (streaming queries execute on
-# call, so they are exercised elsewhere; the faithful OHLC mode is the
-# deliberate COLLECT_LIST witness).
-CLEAN = [
-    "ohlc_candles",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "join_asof_purchase_view",
-    "dedup_exact",
-    "text_tfidf",
-    "window_rank_battery",
-    "join_interval_overlap",
-    "candle_trend_slope",
-    "q6_forecast_revenue",
-    "q10_returned_items",
-    "q18_large_volume_customers",
-    # dedup_jaccard_ppjoin is NOT here: its verification collects per-doc
-    # shingle SETS (bounded by document length, not group cardinality) —
-    # same deliberate pattern as dedup_minhash_lsh, which the linter
-    # rightly flags as a collect and we rightly accept.
-    "pack_sequences",
-    "vwap_candles",
-    "twap_candles",
-    "ohlc_rollup_candles",
-    "cms_token_counts",
-    # round 3 corpus hygiene (domain_mixture's only finding is the
-    # 1-row-total NL_BROADCAST info, which is the intended scalar attach)
-    "quality_repetition",
-    "decontaminate_ngram",
-    "domain_mixture",
-    "text_lm_coverage",
-    # round 5 additions (hierarchy rollup executes its closure eagerly,
-    # so only the final rollup plan is lintable — included anyway).
-    # embedding_quantize_int8 is NOT here: its collect_list builds the
-    # per-dim [min,max] arrays from the DIMS table — bounded by the
-    # embedding dimensionality, not by corpus size — the same
-    # deliberate bounded-collect pattern as dedup_jaccard_ppjoin.
-    "part_hierarchy_rollup",
-    "cooc_lift_topk",
-    "inverted_index_champions",
-    "conjunctive_search",
-    "approx_percentile_audit",
-]
-
-
-def test_clean_queries_have_no_findings(spark):
-    for name in CLEAN:
-        errors = [
-            f for f in lint_plan(QUERIES[name](spark, SF_SMOKE))
-            if f[0] == "error"
-        ]
-        assert not errors, (name, errors)
 
 
 def test_linter_flags_cartesian(spark):
@@ -182,30 +128,6 @@ def test_hint_lint_filtered_relation_is_info_not_error(spark):
     assert findings[0][0] == "info"
 
 
-def test_registry_batch_queries_have_no_hint_errors(spark):
-    """No registered batch query may hard-broadcast an SF-proportional
-    build side (streaming twins execute real micro-batches on call and
-    carry no hints — checked by their own tests). Deliberate,
-    documented findings share tools_lint.py's EXPECTED set — one source
-    of truth (e.g. ann_index_persist_search broadcasts PARQUET-LOADED
-    index tables whose row counts are schema constants the classifier
-    cannot see)."""
-    from tools_lint import EXPECTED
-
-    bad = {}
-    for name, fn in QUERIES.items():
-        if name.startswith("streaming_") or name.startswith("pyds_stream"):
-            continue
-        errors = [
-            f
-            for f in lint_hints(fn(spark, SF_SMOKE))
-            if f[0] == "error" and (name, f[1]) not in EXPECTED
-        ]
-        if errors:
-            bad[name] = errors
-    assert not bad, bad
-
-
 def test_output_schema_lint_flags_nested_columns(spark):
     """Regression for the r8 token_id_encode driver red: a raw
     array/map/struct column in an oracle-backed final schema aborts the
@@ -227,20 +149,3 @@ def test_output_schema_lint_flags_nested_columns(spark):
     )
     assert lint_output_schema(flat) == []
 
-
-def test_oracle_backed_registry_outputs_are_flat(spark):
-    """Every oracle-backed query's final schema must be driver-hashable:
-    no top-level array/map/struct columns anywhere in the registry."""
-    from ohlc_spark_streaming_spark.plans.linter import lint_output_schema
-    from ohlc_spark_streaming_spark.registry import ORACLES
-
-    bad = {}
-    for name, fn in QUERIES.items():
-        if name not in ORACLES:
-            continue
-        if name.startswith("streaming_") or name.startswith("pyds_stream"):
-            continue  # execute real micro-batches; covered by the sweep
-        nested = lint_output_schema(fn(spark, SF_SMOKE))
-        if nested:
-            bad[name] = [m for _s, _c, m in nested]
-    assert not bad, bad

@@ -4,7 +4,10 @@ Run: ``python tools_lint.py [query ...]`` — sweeps every registered batch
 query (or just the named ones) through ``plans/linter.lint_plan`` (executed
 physical plan) and ``plans/linter.lint_hints`` (analyzed logical plan),
 prints findings, and exits non-zero iff any ERROR-severity finding appears
-outside the declared expected set. Streaming twins are skipped: they run
+outside the declared expected set, or an expected entry is stale: its
+query was linted and raised no such finding, or no query of that name is
+registered. A stale entry would silently exempt the query from the gate
+the day it regresses. Streaming twins are skipped: they run
 real micro-batches on call and carry no join hints (their state discipline
 is covered by tests/test_streaming*.py).
 
@@ -39,18 +42,15 @@ EXPECTED = {
     # the linter flags it.
     ("ohlc_candles_faithful", "COLLECT_LIST"),
     # Per-doc shingle/token SETS bounded by document length, not group
-    # cardinality (operators/dedup.py, tests/test_plan_linter.py notes).
+    # cardinality (operators/dedup.py, tests/test_registry_oracle.py notes).
     ("dedup_minhash_lsh", "COLLECT_LIST"),
     ("dedup_jaccard_ppjoin", "COLLECT_LIST"),
-    ("dedup_jaccard_pairs", "COLLECT_LIST"),
     ("dedup_containment", "COLLECT_LIST"),
-    ("dedup_simhash", "COLLECT_LIST"),
     ("dedup_clusters", "COLLECT_LIST"),
     ("dedup_clusters_star", "COLLECT_LIST"),
     ("dedup_cross_source", "COLLECT_LIST"),
     ("dedup_hybrid_pairs", "COLLECT_LIST"),
     ("minhash_recall_audit", "COLLECT_LIST"),
-    ("dedup_ngram_jaccard", "COLLECT_LIST"),
     # Vocab-bounded or k-bounded collects (documented at the call sites).
     ("embedding_quantize_int8", "COLLECT_LIST"),
     ("user_event_type_sets", "COLLECT_LIST"),
@@ -119,14 +119,6 @@ EXPECTED = {
     # doc-length-bounded like the rest of the dedup family —
     # queries/llm.py::q_simhash_recall_audit.
     ("simhash_recall_audit", "COLLECT_LIST"),
-    # The broadcast build sides are the PARQUET-LOADED trained-index
-    # tables (centroids: n_cells rows, codebook: n_subspaces × n_cents
-    # rows — schema constants written by write_ann_index, independent of
-    # corpus SF). The linter classifies any base-relation scan as
-    # SF-proportional because it cannot see the artifact's provenance;
-    # here the bound is by construction (operators/similarity.py::
-    # write_ann_index / ann_index_search).
-    ("ann_index_persist_search", "BROADCAST_UNFILTERED"),
 }
 
 
@@ -188,7 +180,7 @@ def main() -> int:
         return 2
     spark = build_session(app_name="engine-lint")
     bad: list[tuple[str, str, str]] = []
-    n_expected = 0
+    fired: set[tuple[str, str]] = set()
     for name, code, msg in lint_checkpoint_hygiene():
         bad.append((name, code, msg))
         print(f"[lint] ERROR {name} {code}: {msg}")
@@ -204,18 +196,26 @@ def main() -> int:
             if sev != "error":
                 continue
             if (name, code) in EXPECTED:
-                n_expected += 1
+                fired.add((name, code))
                 continue
             bad.append((name, code, msg))
             print(f"[lint] ERROR {name} {code}: {msg}")
         if i % 25 == 0:
             print(f"[lint] ... {i}/{len(names)}")
     spark.stop()
+    stale = sorted(
+        (name, code)
+        for name, code in EXPECTED - fired
+        if name in names or name not in QUERIES
+    )
+    for name, code in stale:
+        print(f"[lint] STALE {name} {code}: expected finding did not fire")
     print(
         f"[lint] {len(names)} queries: {len(bad)} unexpected error(s), "
-        f"{n_expected} expected/documented finding(s)"
+        f"{len(fired)} expected/documented finding(s), "
+        f"{len(stale)} stale expected entr{'y' if len(stale) == 1 else 'ies'}"
     )
-    return 1 if bad else 0
+    return 1 if bad or stale else 0
 
 
 if __name__ == "__main__":

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectorops import as_double_array, cosine, dot
+from ..session import scoped_confs
 
 N_PLANES = 8
 _LCG_M = 2**31
@@ -843,15 +844,6 @@ def lloyd_train(
         + "".join(f"{p}: int, " for p in parts)
         + "_ccid: bigint, _cv: array<double>>>"
     )
-    # The per-iteration exchange carries at most k·dim map-side-combined
-    # rows REGARDLESS of corpus size (partial aggregation collapses each
-    # map task to ≤ k·dim groups), so size it to the bounded output
-    # instead of the session default (guide §2.2 "fewer, larger reduce
-    # partitions"; run_to_memory's save/restore idiom). At sf0.1 this
-    # also removes the AQE 32→1 coalesce re-planning from every
-    # training job (~0.3 s/iteration on this box).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-
     def with_cands(frame: DataFrame) -> DataFrame:
         one = spark.createDataFrame(
             [
@@ -888,8 +880,12 @@ def lloyd_train(
             )
         ).getField("c")
 
-    spark.conf.set("spark.sql.shuffle.partitions", str(_TRAIN_AGG_PARTITIONS))
-    try:
+    # The per-iteration exchange carries at most k·dim map-side-combined
+    # rows REGARDLESS of corpus size, so size it to the bounded output
+    # (_TRAIN_CONFS; guide §2.2 "fewer, larger reduce partitions"). At
+    # sf0.1 this also removes the AQE 32→1 coalesce re-planning from
+    # every training job (~0.3 s/iteration on this box).
+    with scoped_confs(spark, _TRAIN_CONFS):
         for _ in range(iters):
             # Two-step projection: the generator (posexplode) must not
             # share a select with the struct-field assignment expression
@@ -934,8 +930,6 @@ def lloyd_train(
                         cv = [x for _, x in comps]
                     nxt.append((ccid, cv))
                 groups[key] = nxt
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     out = [
         (*key, ccid, cv)
         for key in sorted(groups)
@@ -944,14 +938,15 @@ def lloyd_train(
     return spark.createDataFrame(out, schema=cents_schema)
 
 
-#: Reduce-partition count for the bounded training aggregates (Lloyd
-#: update, k-means‖ cost/weight passes): map-side partial aggregation
-#: collapses every map task to ≤ k·dim (resp. ≤ |cands|) groups, so the
-#: exchange carries a bounded row count at ANY corpus size — sizing it
+#: Session confs for the bounded training aggregates (Lloyd update,
+#: k-means‖ cost/weight passes), set by session.scoped_confs for the
+#: training loop: map-side partial aggregation collapses every map task
+#: to ≤ k·dim (resp. ≤ |cands|) groups, so the exchange carries a
+#: bounded row count at ANY corpus size — sizing its reduce partitions
 #: to the output instead of the session default is scale-independent
 #: (guide §2.2), and at bench scale removes the AQE coalesce round trip
 #: from every training job.
-_TRAIN_AGG_PARTITIONS = 8
+_TRAIN_CONFS = {"spark.sql.shuffle.partitions": "8"}
 
 #: k-means‖ per-round hash constants. The MinHash multipliers (< 3e4)
 #: are NOT reusable here: sequential ids never wrap ``P`` under them, so
@@ -1039,9 +1034,7 @@ def kmeanspar_seeds(
             + F.lit(0.5)
         ).cast("long")
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_TRAIN_AGG_PARTITIONS))
-    try:
+    with scoped_confs(spark, _TRAIN_CONFS):
         for r in range(1, rounds + 1):
             dc = _with_cents(d, cands)
             dist = dc.select(F.col(id_col), min_du().alias("_du"))
@@ -1076,8 +1069,6 @@ def kmeanspar_seeds(
             .agg(F.count(F.lit(1)).alias("_w"))
             .collect()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     weights = {r3._ncid: r3._w for r3 in near}
     # A candidate whose region is empty (a duplicate vector losing the
     # d=0 tie to a smaller id) has no mass — it neither seeds nor votes

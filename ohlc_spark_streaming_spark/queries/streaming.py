@@ -17,9 +17,11 @@ from pyspark.sql import functions as F
 
 from ..operators.sessions import session_aggregate
 from ..registry import register
+from ..session import default_parallelism, scoped_confs
 from ..sources.batch import load_table
-from ..sources.stream import events_stream
+from ..sources.stream import one_row_frame, replay_tape, table_stream
 from ..streaming.candles import run_to_memory, streaming_ohlc_candles
+from ..streaming.checkpoints import fold_stream, stream_start
 from ..streaming.dedup import distinct_keys
 from ..streaming.joins import interval_join
 from ._oracles import OHLC_ORACLE as _OHLC_ORACLE
@@ -39,7 +41,7 @@ def q_streaming_ohlc_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same aggregate expressions as the batch operator (by construction), so
     the batch oracle applies verbatim."""
-    stream = events_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "events")
     candles = streaming_ohlc_candles(
         stream,
         ts_col="ts",
@@ -49,8 +51,7 @@ def q_streaming_ohlc_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_duration="1 hour",
         watermark_delay="2 minutes",
     )
-    name = f"stream_ohlc_result_{next(_counter)}"
-    return run_to_memory(candles, name, output_mode="complete")
+    return run_to_memory(candles, output_mode="complete")
 
 
 # Sliding candles: every event lands in duration/slide = 2 windows; the
@@ -137,7 +138,7 @@ def q_session_windows_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sessionization: merging session-window state, complete
     mode over a bounded replay — must equal the batch/oracle answer."""
-    stream = events_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "events")
     sessions = session_aggregate(
         stream.withWatermark("ts", "2 minutes"),
         ts_col="ts",
@@ -151,8 +152,7 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "sum_value",
     )
-    name = f"stream_sessions_{next(_counter)}"
-    return run_to_memory(sessions, name, output_mode="complete")
+    return run_to_memory(sessions, output_mode="complete")
 
 
 @register(
@@ -162,10 +162,9 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_distinct_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact streaming dedup (dropDuplicates) on (user_id, event_type):
     first sighting per key, append mode."""
-    stream = events_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "events")
     out = distinct_keys(stream, ["user_id", "event_type"])
-    name = f"stream_distinct_{next(_counter)}"
-    return run_to_memory(out, name, output_mode="append")
+    return run_to_memory(out, output_mode="append")
 
 
 _INTERVAL_JOIN_ORACLE = """
@@ -187,7 +186,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's views within the preceding 2 hours. Watermarks + the time band
     bound the join state (SURVEY.md §2.9)."""
     purchases = (
-        events_stream(spark, sf_dir)
+        table_stream(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -196,7 +195,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     views = (
-        events_stream(spark, sf_dir)
+        table_stream(spark, sf_dir, "events")
         .where(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("view_id"),
@@ -222,8 +221,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
         )
     )
-    name = f"stream_ivjoin_{next(_counter)}"
-    return run_to_memory(joined, name, output_mode="append")
+    return run_to_memory(joined, output_mode="append")
 
 
 _STREAM_WIRE_ORACLE = """
@@ -263,7 +261,7 @@ def q_streaming_trade_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.trades import trades_from_wire
     from .reference import _wire_trades
 
-    stream = events_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "events")
     trades = trades_from_wire(_wire_trades(stream)).withColumn(
         # Watermarks need TIMESTAMP (not NTZ); UTC session → same instant.
         "timestamp",
@@ -278,8 +276,7 @@ def q_streaming_trade_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         window_duration="15 minutes",
         watermark_delay="2 minutes",
     )
-    name = f"stream_wire_{next(_counter)}"
-    return run_to_memory(candles, name, output_mode="complete")
+    return run_to_memory(candles, output_mode="complete")
 
 
 _CATEGORY_ORACLE = """
@@ -311,14 +308,13 @@ def q_streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         ["event_type", "category"],
     )
-    stream = events_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "events")
     enriched = stream.join(F.broadcast(dim), "event_type")
     agg = enriched.groupBy("category").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(30,6)")).cast("double").alias("sum_value"),
     )
-    name = f"stream_static_{next(_counter)}"
-    return run_to_memory(agg, name, output_mode="complete")
+    return run_to_memory(agg, output_mode="complete")
 
 
 @register(
@@ -338,14 +334,12 @@ def q_streaming_stateful_error_counts(spark: SparkSession, sf_dir: str) -> DataF
     value-hash-checked."""
     from ..streaming.stateful import final_counts, stateful_event_counts
 
-    from ..session import default_parallelism
 
-    stream = events_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "events")
     emissions = stateful_event_counts(stream)
-    name = f"stream_stateful_{next(_counter)}"
     # Python-stateful: size partitions for Arrow-worker parallelism.
     log = run_to_memory(
-        emissions, name, output_mode="update",
+        emissions, output_mode="update",
         partitions=max(8, default_parallelism() // 2),
     )
     return final_counts(log)
@@ -356,7 +350,7 @@ def q_streaming_sliding_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the sliding candles: overlapping 1-hour windows
     every 30 minutes over the watermarked stream (each event updates 2
     window states; state per (window, symbol) stays O(1))."""
-    stream = events_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "events")
     candles = streaming_ohlc_candles(
         stream,
         ts_col="ts",
@@ -367,8 +361,7 @@ def q_streaming_sliding_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
         slide="30 minutes",
         watermark_delay="2 minutes",
     )
-    name = f"stream_sliding_{next(_counter)}"
-    return run_to_memory(candles, name, output_mode="complete")
+    return run_to_memory(candles, output_mode="complete")
 
 
 @register(
@@ -396,7 +389,7 @@ def q_streaming_vwap_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed event stream, complete mode — integer-cent weighted sums make
     the streaming answer bit-equal to the batch oracle. State per
     (window, symbol) is three scalars (Σcents·qty, Σqty, n)."""
-    stream = events_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "events")
     qty = F.get_json_object(F.col("props"), "$.k").cast("long")
     cents = F.round(F.col("value") * 100).cast("long")
     agg = (
@@ -428,8 +421,7 @@ def q_streaming_vwap_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"stream_vwap_{next(_counter)}"
-    return run_to_memory(agg, name, output_mode="complete")
+    return run_to_memory(agg, output_mode="complete")
 
 
 @register(
@@ -465,9 +457,8 @@ def q_streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from availableNow, not a watermark). Demonstrates that the LLM-data
     operators run unchanged under Structured Streaming."""
     from ..functions.textops import STOPWORDS
-    from ..sources.stream import documents_stream
 
-    docs = documents_stream(spark, sf_dir)
+    docs = table_stream(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     ttr = F.size(F.array_distinct(toks)) / n
@@ -486,8 +477,7 @@ def q_streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("min_doc_id"),
         )
     )
-    name = f"stream_quality_{next(_counter)}"
-    return run_to_memory(agg, name, output_mode="complete")
+    return run_to_memory(agg, output_mode="complete")
 
 
 from ._oracles import ANOMALY_ZSCORE_ORACLE as _ANOMALY_ORACLE  # noqa: E402
@@ -501,8 +491,6 @@ def q_streaming_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type totals aggregate in complete mode. This is the deployed
     shape: bounds refresh on a slow batch cadence, flagging runs on the
     stream with a broadcast-sized static side and 5 rows of state."""
-    from ..sources.stream import events_stream
-
     ev_static = load_table(spark, sf_dir, "events")
     dec = F.col("value").cast("decimal(12,6)")
     stats = ev_static.groupBy("event_type").agg(
@@ -520,7 +508,7 @@ def q_streaming_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sd"),
     )
 
-    stream = events_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "events")
     flagged = F.abs(F.col("value") - F.col("mean")) > 3 * F.col("sd")
     agg = (
         stream.join(F.broadcast(bounds), "event_type")
@@ -531,8 +519,7 @@ def q_streaming_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.when(flagged, F.col("event_id"))).alias("first_anomaly_id"),
         )
     )
-    name = f"stream_anomaly_{next(_counter)}"
-    return run_to_memory(agg, name, output_mode="complete")
+    return run_to_memory(agg, output_mode="complete")
 
 
 from .analytics import (  # noqa: E402  (analytics imports before streaming)
@@ -558,7 +545,7 @@ def q_streaming_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     def first_ts(kind: str):
         return F.min(F.when(F.col("event_type") == kind, F.col("ts")))
 
-    stream = events_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "events")
     stages = (
         stream.withWatermark("ts", "2 minutes")
         .groupBy(
@@ -572,8 +559,7 @@ def q_streaming_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "t_view", "t_click", "t_purchase")
     )
-    name = f"stream_funnel_{next(_counter)}"
-    log = run_to_memory(stages, name, output_mode="complete")
+    log = run_to_memory(stages, output_mode="complete")
     return funnel_rollup(log)
 
 
@@ -587,14 +573,12 @@ def q_streaming_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFram
     so the batch oracle applies verbatim. This is the streaming face of
     the SLO/heartbeat profile: O(keys) state, Arrow-batched Python, no
     per-row UDF."""
-    from ..session import default_parallelism
     from ..streaming.stateful import stateful_interarrival_gaps
 
-    stream = events_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "events")
     gaps = stateful_interarrival_gaps(stream)
-    name = f"stream_gaps_{next(_counter)}"
     log = run_to_memory(
-        gaps, name, output_mode="append",
+        gaps, output_mode="append",
         partitions=max(8, default_parallelism() // 2),
     )
     return interarrival_rollup(log)
@@ -609,7 +593,7 @@ def q_streaming_candle_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFra
     finished candle set with the same shared reduction as the batch twin
     (the deployed shape: live candle build, periodic robust-bounds sweep
     over the materialized series)."""
-    stream = events_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "events")
     candles = (
         stream.withWatermark("ts", "2 minutes")
         .groupBy(
@@ -623,8 +607,7 @@ def q_streaming_candle_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFra
             "n_trades",
         )
     )
-    name = f"stream_mad_{next(_counter)}"
-    log = run_to_memory(candles, name, output_mode="complete")
+    log = run_to_memory(candles, output_mode="complete")
     # The rollup self-joins the candle set (median/MAD back-join); memory
     # -sink views hit Spark's conflicting-reference resolution bug under
     # self-join, so break lineage first (the log is hours×symbols tiny).
@@ -660,7 +643,6 @@ def q_pyds_stream_tick_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     connector+stream path, which the reference's console sink never
     could (/root/reference/main.py:90-99)."""
     from ..sources.python_ds import register_tick_source
-    from ..streaming.checkpoints import stream_start
 
     register_tick_source(spark)
     ticks = (
@@ -676,6 +658,10 @@ def q_pyds_stream_tick_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("tick_id").alias("last_tick"),
         (F.sum(cents).cast("double") / F.lit(100.0)).alias("total"),
     )
+    # Not run_to_memory: under trigger(availableNow=True) this Python
+    # source reports its first prefetched batch as the latest offset, so
+    # the query stops after 600 of the 2000 rows and returns a wrong
+    # answer (measured). Drain until the reader's empty-batch signal.
     name = f"pyds_stream_{next(_counter)}"
     with stream_start(spark, None):
         query = (
@@ -707,15 +693,12 @@ def q_streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct document is one fingerprint + two longs, so the stateful
     aggregation holds the DISTINCT corpus, never the stream. Shares the
     batch oracle (bounded replay ⇒ identical answer)."""
-    from ..sources.stream import documents_stream
-
-    docs = documents_stream(spark, sf_dir)
+    docs = table_stream(spark, sf_dir, "documents")
     agg = docs.groupBy(F.sha2("text", 256).alias("fp")).agg(
         F.min("doc_id").alias("doc_id"),
         F.count(F.lit(1)).alias("n_copies"),
     )
-    name = f"stream_dedup_{next(_counter)}"
-    return run_to_memory(agg, name, output_mode="complete")
+    return run_to_memory(agg, output_mode="complete")
 
 
 @register("streaming_incremental_candles", _OHLC_ORACLE)
@@ -736,33 +719,19 @@ def q_streaming_incremental_candles(spark: SparkSession, sf_dir: str) -> DataFra
         ohlc_partial_candles,
     )
 
-    stream = events_stream(spark, sf_dir)
-    holder: dict[str, DataFrame | None] = {"state": None}
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
+    def step(state: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         partial = ohlc_partial_candles(
             batch_df, ts_col="ts", symbol_col="event_type",
             price_col="value", qty_col=None, window_duration="1 hour",
         )
-        cur = holder["state"]
-        un = partial if cur is None else cur.unionByName(partial)
+        un = partial if state is None else state.unionByName(partial)
         # Eager localCheckpoint: the folded state must not re-read prior
         # micro-batch inputs (they are consumed), and the plan must not
         # grow with batch count.
-        holder["state"] = ohlc_merge_partial_states(un).localCheckpoint(
-            eager=True
-        )
+        return ohlc_merge_partial_states(un).localCheckpoint(eager=True)
 
-    from ..streaming.checkpoints import run_foreach_batch
-
-    # Fresh ephemeral checkpoint per invocation: reusing one across
-    # processes would resume past the already-committed files and fold
-    # NOTHING; cleanup is the helper's contract (CKPT_RAW lint).
-    run_foreach_batch(stream, fold, f"stream_ivm_{next(_counter)}")
-    state = holder["state"]
-    if state is None:
-        raise RuntimeError("stream produced no micro-batches")
-    return ohlc_finalize_partials(state)
+    stream = table_stream(spark, sf_dir, "events")
+    return ohlc_finalize_partials(fold_stream(stream, step))
 
 
 _ASOF_ENRICH_ORACLE = """
@@ -806,13 +775,11 @@ def q_streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "ts", "value")
         .localCheckpoint(eager=True)  # static dim snapshot
     )
-    stream = events_stream(spark, sf_dir).where(
+    stream = table_stream(spark, sf_dir, "events").where(
         F.col("event_type") == "purchase"
     ).select("event_id", "user_id", "ts", "value")
 
-    chunks: list[DataFrame] = []
-
-    def enrich(batch_df: DataFrame, _batch_id: int) -> None:
+    def step(acc: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         out = asof_join(
             batch_df,
             views,
@@ -829,17 +796,10 @@ def q_streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "asof_ts",
             F.col("asof_value"),
         )
-        chunks.append(out.localCheckpoint(eager=True))
+        out = out.localCheckpoint(eager=True)
+        return out if acc is None else acc.unionByName(out)
 
-    from ..streaming.checkpoints import run_foreach_batch
-
-    run_foreach_batch(stream, enrich, f"stream_asof_{next(_counter)}")
-    if not chunks:
-        raise RuntimeError("stream produced no micro-batches")
-    out = chunks[0]
-    for c in chunks[1:]:
-        out = out.unionByName(c)
-    return out
+    return fold_stream(stream, step)
 
 
 @register(
@@ -864,14 +824,12 @@ def q_streaming_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     Every transition is emitted exactly once, so the bounded replay's
     counts equal the batch lead() aggregate bit-for-bit — the oracle IS
     the batch SQL."""
-    from ..session import default_parallelism
     from ..streaming.stateful import stateful_transitions
 
-    stream = events_stream(spark, sf_dir)
+    stream = table_stream(spark, sf_dir, "events")
     emissions = stateful_transitions(stream)
-    name = f"stream_transitions_{next(_counter)}"
     log = run_to_memory(
-        emissions, name, output_mode="append",
+        emissions, output_mode="append",
         partitions=max(8, default_parallelism() // 2),
     )
     return log.groupBy("from_type", "to_type").agg(
@@ -891,15 +849,16 @@ def q_streaming_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame
 # protocol), which _compat provisions even on the correctness driver's
 # plain session via sc.environment (see ensure_protobuf_for_session).
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
+_ROCKSDB_CONFS = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    )
+}
 
 
 def _run_tws(
-    spark, build_emissions, name: str, output_mode: str,
-    partitions: int | None = None,
+    spark, build_emissions, output_mode: str, partitions: int | None = None
 ) -> DataFrame:
     """Run a transformWithStateInPandas emission stream to completion:
     provision the protobuf worker shim BEFORE the UDF is created (envVars
@@ -912,7 +871,6 @@ def _run_tws(
     ~20k groups of a few entries) are fastest well below the core count —
     measured at sf0.1: 8 parts 14.4s, 16 parts 19.5s, 32 parts 19.4s,
     4 parts 32.8s. Defaults to the established max(8, cores/2)."""
-    from ..session import default_parallelism
     from .._compat import ensure_protobuf_for_session
 
     if not ensure_protobuf_for_session(spark):
@@ -920,22 +878,11 @@ def _run_tws(
             "transformWithStateInPandas needs google.protobuf in the Python "
             "workers and no runtime was found (_compat.ensure_protobuf)"
         )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-    )
-    try:
+    with scoped_confs(spark, _ROCKSDB_CONFS):
         return run_to_memory(
-            build_emissions(), name, output_mode=output_mode,
+            build_emissions(), output_mode=output_mode,
             partitions=partitions or max(8, default_parallelism() // 2),
         )
-    finally:
-        if prev:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 @register(
@@ -956,8 +903,7 @@ def q_streaming_error_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     log = _run_tws(
         spark,
-        lambda: tws_event_counts(events_stream(spark, sf_dir)),
-        f"stream_tws_counts_{next(_counter)}",
+        lambda: tws_event_counts(table_stream(spark, sf_dir, "events")),
         "update",
     )
     return final_counts(log)
@@ -981,8 +927,9 @@ def q_streaming_interarrival_stats_tws(
 
     log = _run_tws(
         spark,
-        lambda: tws_interarrival_gaps_mapstate(events_stream(spark, sf_dir)),
-        f"stream_tws_gaps_{next(_counter)}",
+        lambda: tws_interarrival_gaps_mapstate(
+            table_stream(spark, sf_dir, "events")
+        ),
         "append",
     )
     return interarrival_rollup(log)
@@ -1013,8 +960,7 @@ def q_streaming_transition_counts_tws(
 
     log = _run_tws(
         spark,
-        lambda: tws_transitions(events_stream(spark, sf_dir)),
-        f"stream_tws_transitions_{next(_counter)}",
+        lambda: tws_transitions(table_stream(spark, sf_dir, "events")),
         "append",
     )
     return log.groupBy("from_type", "to_type").agg(
@@ -1045,16 +991,14 @@ def q_streaming_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer-vocabulary monitor: the state store IS the live
     vocabulary."""
     from pyspark.sql import Window
-    from ..sources.stream import documents_stream
 
-    docs = documents_stream(spark, sf_dir)
+    docs = table_stream(spark, sf_dir, "documents")
     counts = (
         docs.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    name = f"stream_vocab_{next(_counter)}"
-    log = run_to_memory(counts, name, output_mode="complete")
+    log = run_to_memory(counts, output_mode="complete")
     top = log.orderBy(F.col("cnt").desc(), F.col("token").asc()).limit(100)
     w = Window.orderBy(F.col("cnt").desc(), F.col("token").asc())
     return top.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -1088,7 +1032,7 @@ def q_streaming_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail (analytics.rolling_active_finalize), so the batch oracle applies
     verbatim. Cross-batch folding exercised on a 4-file time-split tape in
     tests/test_streaming_round8.py."""
-    return fold_rolling_active(events_stream(spark, sf_dir))
+    return fold_rolling_active(table_stream(spark, sf_dir, "events"))
 
 
 def fold_rolling_active(stream: DataFrame) -> DataFrame:
@@ -1098,10 +1042,9 @@ def fold_rolling_active(stream: DataFrame) -> DataFrame:
     from ..operators.sessions import interval_union
     from .analytics import rolling_active_finalize
 
-    holder: dict[str, DataFrame | None] = {"state": None}
     epoch = F.lit("1970-01-01").cast("date")
 
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
+    def step(state: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         iv = (
             batch_df.select(
                 "user_id",
@@ -1110,8 +1053,7 @@ def fold_rolling_active(stream: DataFrame) -> DataFrame:
             .distinct()
             .select("user_id", "st", (F.col("st") + 6).alias("en"))
         )
-        cur = holder["state"]
-        un = iv if cur is None else cur.unionByName(iv)
+        un = iv if state is None else state.unionByName(iv)
         merged = interval_union(
             un, key_col="user_id", start_col="st", end_col="en"
         ).select(
@@ -1121,14 +1063,9 @@ def fold_rolling_active(stream: DataFrame) -> DataFrame:
         )
         # Eager localCheckpoint: consumed micro-batch inputs must not be
         # re-read at finalize, and the plan must not grow with batch count.
-        holder["state"] = merged.localCheckpoint(eager=True)
+        return merged.localCheckpoint(eager=True)
 
-    from ..streaming.checkpoints import run_foreach_batch
-
-    run_foreach_batch(stream, fold, f"stream_rolling_{next(_counter)}")
-    state = holder["state"]
-    if state is None:
-        raise RuntimeError("stream produced no micro-batches")
+    state = fold_stream(stream, step)
     # Span from the checkpointed state (re-reading it is free): every
     # island ends 6 days after its key's last activity day, so
     # d_hi = max(en) - 6 recovers the activity-day calendar exactly.
@@ -1166,9 +1103,6 @@ def q_streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         neardup_finalize,
         tws_lsh_candidates,
     )
-    from ..sources.stream import documents_stream
-
-    from ..session import default_parallelism
 
     cand = _run_tws(
         spark,
@@ -1179,12 +1113,11 @@ def q_streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the per-doc char-fold across cores.
         lambda: tws_lsh_candidates(
             lsh_band_rows(
-                documents_stream(spark, sf_dir).repartition(
+                table_stream(spark, sf_dir, "documents").repartition(
                     default_parallelism()
                 )
             )
         ),
-        f"stream_lsh_{next(_counter)}",
         "append",
         partitions=8,  # many tiny groups: state-server setup dominates
     )
@@ -1233,7 +1166,6 @@ def q_streaming_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_window twin (streaming_session_windows) must run complete."""
     import datetime
 
-    from ..sources.stream import replay_tape
     from ..streaming.stateful import SESSION_GAP_US, tws_session_timers
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1248,7 +1180,6 @@ def q_streaming_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel_ts = max_ts + datetime.timedelta(
         microseconds=SESSION_GAP_US, seconds=_SESSION_WM_DELAY_S + 1
     )
-    from ..sources.stream import one_row_frame
 
     sentinel = one_row_frame(
         spark,
@@ -1275,7 +1206,6 @@ def q_streaming_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
         log = _run_tws(
             spark,
             lambda: tws_session_timers(stream),
-            f"stream_session_timers_{next(_counter)}",
             "append",
         )
     return session_timers_rollup(log)
@@ -1295,8 +1225,8 @@ def q_streaming_dedup_then_candles(
     with two state stores, not two queries glued by a sink; the result
     must equal the batch flagship exactly (oracle shared verbatim) —
     proof the dedup stage dropped every duplicate and nothing else."""
-    dup = events_stream(spark, sf_dir).unionByName(
-        events_stream(spark, sf_dir)
+    dup = table_stream(spark, sf_dir, "events").unionByName(
+        table_stream(spark, sf_dir, "events")
     )
     # ONE watermark for the whole chain: redefining it between stateful
     # operators is disallowed under multi-stateful support, so the dedup
@@ -1325,8 +1255,7 @@ def q_streaming_dedup_then_candles(
             "n_trades",
         )
     )
-    name = f"stream_dedup_candles_{next(_counter)}"
-    return run_to_memory(candles, name, output_mode="complete")
+    return run_to_memory(candles, output_mode="complete")
 
 
 @register(
@@ -1354,7 +1283,7 @@ def q_streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.joins import interval_join_left_semi
 
     purchases = (
-        events_stream(spark, sf_dir)
+        table_stream(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -1363,7 +1292,7 @@ def q_streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     views = (
-        events_stream(spark, sf_dir)
+        table_stream(spark, sf_dir, "events")
         .where(F.col("event_type") == "view")
         .select(
             F.col("user_id").alias("v_user_id"),
@@ -1383,8 +1312,7 @@ def q_streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("key_id").alias("user_id"),
         F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
     )
-    name = f"stream_semi_{next(_counter)}"
-    return run_to_memory(out, name, output_mode="append")
+    return run_to_memory(out, output_mode="append")
 
 
 def _closed_event_tape(spark: SparkSession, sf_dir: str):
@@ -1402,7 +1330,6 @@ def _closed_event_tape(spark: SparkSession, sf_dir: str):
         "event_id", "ts", "user_id", "event_type"
     )
     max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]  # 1-row fence
-    from ..sources.stream import one_row_frame
 
     # Single-partition one-row frames (see one_row_frame: a plain
     # createDataFrame sentinel cost 6-7s PER WRITE through replay_tape's
@@ -1490,7 +1417,6 @@ def q_streaming_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark nodes never saw them, and the last watermark-delay of
     genuine anti rows was silently withheld (observed, round 10).
     Oracle: the equivalent NOT EXISTS, exact because the tape is closed."""
-    from ..sources.stream import replay_tape
     from ..streaming.joins import interval_join_left_anti
 
     ev, sentinels = _closed_event_tape(spark, sf_dir)
@@ -1533,13 +1459,12 @@ def q_streaming_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("key_id").alias("user_id"),
             F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
         )
-        name = f"stream_anti_{next(_counter)}"
         # Sentinel guard BATCH-side (see docstring: a streaming-side
         # filter would be pushed into the scans and starve the
         # watermark).
         # Null-safe: a plain != would also drop NULL-user purchases
         # that the NOT EXISTS oracle keeps.
-        return run_to_memory(out, name, output_mode="append").where(
+        return run_to_memory(out, output_mode="append").where(
             ~F.col("user_id").eqNullSafe(F.lit(_ANTI_SENTINEL_USER))
         )
 
@@ -1576,7 +1501,6 @@ def q_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     see q_streaming_anti_join). Sentinel self-emissions are matched
     pairs (each left sentinel has an in-band right sentinel), removed by
     the same user-id guard. Oracle: the equivalent FULL OUTER JOIN."""
-    from ..sources.stream import replay_tape
     from ..streaming.joins import interval_join_full_outer
 
     ev, sentinels = _closed_event_tape(spark, sf_dir)
@@ -1618,10 +1542,9 @@ def q_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
             F.col("view_ts").cast("timestamp_ntz").alias("view_ts"),
         )
-        name = f"stream_fullouter_{next(_counter)}"
         # Guard batch-side, null-safe (user_id is never null here —
         # coalesce of the join keys — but keep the anti join's idiom).
-        return run_to_memory(out, name, output_mode="append").where(
+        return run_to_memory(out, output_mode="append").where(
             ~F.col("user_id").eqNullSafe(F.lit(_ANTI_SENTINEL_USER))
         )
 
@@ -1700,15 +1623,13 @@ def q_streaming_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram projection + broadcast left join + per-doc max, and the fold
     keeps O(#sources) additive state (each doc arrives in exactly one
     batch, so per-source counts sum across batches) via the sanctioned
-    run_foreach_batch driver. Docs shorter than {_DECON_GRAM} tokens
+    fold_stream helper. Docs shorter than {_DECON_GRAM} tokens
     produce zero grams and count clean via explode_outer — same edge
     the oracle's LEFT JOIN handles. Output: per train source, docs
     scanned / contaminated / clean."""
-    from ..sources.stream import documents_stream
-
     docs_all = load_table(spark, sf_dir, "documents")
     eval_grams = build_eval_grams(docs_all)
-    stream = documents_stream(spark, sf_dir).where(
+    stream = table_stream(spark, sf_dir, "documents").where(
         F.col("source") != _DECON_SRC
     )
     out = fold_decontaminate(stream, eval_grams.df)
@@ -1806,29 +1727,19 @@ def fold_eval_grams(
     tape test drives. Returns the final gram table in the gate's
     (gram, _hit) schema as a :class:`TrackedFrame` for
     :func:`release_ckpt`."""
-    from ..streaming.checkpoints import run_foreach_batch
-
-    holder: dict[str, TrackedFrame | None] = {
-        "state": (
-            TrackedFrame(state.df.select("gram")) if state is not None else None
-        )
-    }
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
+    def step(cur: TrackedFrame | None, batch_df: DataFrame) -> TrackedFrame:
         bg = batch_df.select(F.explode(_decon_grams()).alias("gram")).distinct()
-        cur = holder["state"]
         new = (
             bg
             if cur is None
             else cur.df.unionByName(bg.join(cur.df, "gram", "left_anti"))
         )
-        holder["state"] = _ckpt_tracked(new)
+        nxt = _ckpt_tracked(new)
         release_ckpt(batch_df.sparkSession, cur)
+        return nxt
 
-    run_foreach_batch(eval_stream, fold, f"stream_evalgrams_{next(_counter)}")
-    out = holder["state"]
-    if out is None:
-        raise RuntimeError("eval stream produced no micro-batches")
+    start = TrackedFrame(state.df.select("gram")) if state is not None else None
+    out = fold_stream(eval_stream, step, start)
     return TrackedFrame(out.df.withColumn("_hit", F.lit(1)), out.ids)
 
 
@@ -1885,14 +1796,12 @@ def q_streaming_decontaminate_incr(spark: SparkSession, sf_dir: str) -> DataFram
     At 100 TB: benchmark suites grow by deltas; re-hashing only the
     appended slice instead of the whole eval corpus per refresh is the
     point, and the train side's per-batch plan is unchanged."""
-    from ..sources.stream import documents_stream
-
-    eval_stream = documents_stream(spark, sf_dir).where(
+    eval_stream = table_stream(spark, sf_dir, "documents").where(
         F.col("source") == _DECON_SRC
     )
     eval_grams = fold_eval_grams(eval_stream)
     n_grams = eval_grams.df.count()
-    train_stream = documents_stream(spark, sf_dir).where(
+    train_stream = table_stream(spark, sf_dir, "documents").where(
         F.col("source") != _DECON_SRC
     )
     out = fold_decontaminate(train_stream, eval_grams.df)
@@ -1904,12 +1813,9 @@ def fold_decontaminate(stream: DataFrame, eval_grams: DataFrame) -> DataFrame:
     """Fold a bounded train-document stream through the eval-gram gate
     (see q_streaming_decontaminate). Factored out so the multi-batch
     test drives the exact production fold over a file-split tape."""
-    from ..streaming.checkpoints import run_foreach_batch
-
     grams = _decon_grams()
-    holder: dict[str, TrackedFrame | None] = {"state": None}
 
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
+    def step(cur: TrackedFrame | None, batch_df: DataFrame) -> TrackedFrame:
         tg = batch_df.select(
             "doc_id", "source", F.explode_outer(grams).alias("gram")
         )
@@ -1924,7 +1830,6 @@ def fold_decontaminate(stream: DataFrame, eval_grams: DataFrame) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("hit").alias("n_contam"),
         )
-        cur = holder["state"]
         un = (
             per_src
             if cur is None
@@ -1939,13 +1844,11 @@ def fold_decontaminate(stream: DataFrame, eval_grams: DataFrame) -> DataFrame:
         # be re-read at finalize, and the plan must not grow with batch
         # count (the fold-family discipline). Tracked ids so each
         # superseded O(#sources) snapshot's blocks actually free.
-        holder["state"] = _ckpt_tracked(un)
+        nxt = _ckpt_tracked(un)
         release_ckpt(batch_df.sparkSession, cur)
+        return nxt
 
-    run_foreach_batch(stream, fold, f"stream_decon_{next(_counter)}")
-    state = holder["state"]
-    if state is None:
-        raise RuntimeError("stream produced no micro-batches")
+    state = fold_stream(stream, step)
     return state.df.select(
         "source",
         F.col("n_docs").cast("long").alias("n_docs"),
@@ -1977,12 +1880,10 @@ def fold_ann_serve(
     read-only, per-batch cost is nprobe/n_cells of the CODES (~3% of
     the bytes), and batches parallelize over queries."""
     from ..operators.similarity import ann_index_search
-    from ..streaming.checkpoints import run_foreach_batch
 
     spark = query_stream.sparkSession
-    rows: list = []
 
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
+    def step(rows: list, batch_df: DataFrame) -> list:
         from ..functions.vectorops import as_double_array
 
         q = batch_df.select(
@@ -1992,9 +1893,9 @@ def fold_ann_serve(
         res = ann_index_search(
             q, index, dim=dim, n_subspaces=n_subspaces, nprobe=nprobe, k=k
         )
-        rows.extend(tuple(r) for r in res.collect())
+        return rows + [tuple(r) for r in res.collect()]
 
-    run_foreach_batch(query_stream, fold, f"stream_annserve_{next(_counter)}")
+    rows = fold_stream(query_stream, step, [])
     # Single-partition driver-local finals (a default createDataFrame
     # spreads the k·q rows over defaultParallelism Python-backed
     # partitions — see sources/stream.one_row_frame).
@@ -2024,7 +1925,6 @@ def q_streaming_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook are already driver-materialized literals (lloyd_train's
     O(k·dim) contract)."""
     from ..operators import similarity as sim_ops
-    from ..sources.stream import embeddings_stream
     from .ann_oracles import _RES_ITERS
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2039,7 +1939,7 @@ def q_streaming_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cells": cells_t.df,
         "codes": codes_t.df,
     }
-    qstream = embeddings_stream(spark, sf_dir).where(F.col("vec_id") < 10)
+    qstream = table_stream(spark, sf_dir, "embeddings").where(F.col("vec_id") < 10)
     out = fold_ann_serve(qstream, frozen, nprobe=2, k=5)
     # Finals are a driver-local relation, so the index blocks are dead
     # once the tape drains.
@@ -2072,12 +1972,10 @@ def fold_ann_serve_refined(
     recall lift (0.72 vs 0.34 at sf0.01) costs one bounded point read
     per candidate. Finals accumulate driver-side, ≤ k rows per query."""
     from ..operators.similarity import ann_index_search_refined
-    from ..streaming.checkpoints import run_foreach_batch
 
     spark = query_stream.sparkSession
-    rows: list = []
 
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
+    def step(rows: list, batch_df: DataFrame) -> list:
         from ..functions.vectorops import as_double_array
 
         q = batch_df.select(
@@ -2094,9 +1992,9 @@ def fold_ann_serve_refined(
             k=k,
             refine_factor=refine_factor,
         )
-        rows.extend(tuple(r) for r in res.collect())
+        return rows + [tuple(r) for r in res.collect()]
 
-    run_foreach_batch(query_stream, fold, f"stream_annrefine_{next(_counter)}")
+    rows = fold_stream(query_stream, step, [])
     return spark.createDataFrame(
         rows, "query_id long, vec_id long, exact_units long, rank long"
     )
@@ -2122,7 +2020,6 @@ def q_streaming_ann_serve_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     column-pruned parquet scan, which is precisely the vector-store
     point-read shape the serving tier has at 100 TB."""
     from ..operators import similarity as sim_ops
-    from ..sources.stream import embeddings_stream
     from .ann_oracles import _RES_ITERS
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2137,7 +2034,7 @@ def q_streaming_ann_serve_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cells": cells_t.df,
         "codes": codes_t.df,
     }
-    qstream = embeddings_stream(spark, sf_dir).where(F.col("vec_id") < 10)
+    qstream = table_stream(spark, sf_dir, "embeddings").where(F.col("vec_id") < 10)
     out = fold_ann_serve_refined(
         qstream, frozen, emb, nprobe=2, k=5, refine_factor=4
     )
@@ -2162,23 +2059,21 @@ def fold_bpe_encode(doc_stream: DataFrame, rules: list) -> DataFrame:
     ledger (the only cross-batch state) is word-keyed — bounded by
     vocabulary, not corpus."""
     from ..operators.bpe import bpe_encode, word_freqs
-    from ..streaming.checkpoints import run_foreach_batch
 
     spark = doc_stream.sparkSession
-    partials: list = []
 
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
+    def step(partials: list, batch_df: DataFrame) -> list:
         enc = bpe_encode(word_freqs(batch_df), rules).select(
             "word",
             F.col("freq").cast("long").alias("freq"),
             F.size("syms").cast("long").alias("n_tokens"),
             F.concat_ws("|", "syms").alias("tokens"),
         )
-        partials.extend(tuple(r) for r in enc.collect())
+        return partials + [tuple(r) for r in enc.collect()]
 
-    run_foreach_batch(doc_stream, fold, f"stream_bpe_{next(_counter)}")
     part_df = spark.createDataFrame(
-        partials, "word string, freq long, n_tokens long, tokens string"
+        fold_stream(doc_stream, step, []),
+        "word string, freq long, n_tokens long, tokens string",
     )
     return part_df.groupBy("word").agg(
         F.sum("freq").cast("long").alias("freq"),
@@ -2207,9 +2102,8 @@ def q_streaming_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     already has (train_ann_index / ann_index_search /
     streaming_ann_serve)."""
     from ..operators.bpe import bpe_train_rules
-    from ..sources.stream import documents_stream
     from .bpe_oracles import _BPE_MERGES
 
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
     rules = bpe_train_rules(docs, _BPE_MERGES)
-    return fold_bpe_encode(documents_stream(spark, sf_dir), rules)
+    return fold_bpe_encode(table_stream(spark, sf_dir, "documents"), rules)

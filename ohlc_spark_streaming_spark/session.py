@@ -16,6 +16,7 @@ Two entry paths:
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -69,6 +70,25 @@ def apply_engine_confs(spark: SparkSession) -> SparkSession:
             # over a tuning knob.
             pass
     return spark
+
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the body, then put each one back:
+    its previous value, or unset if it was unset — also when the body
+    raises. The one place outside :func:`apply_engine_confs` that writes
+    session confs (tools_lint.py's CONF_RAW lint keeps it that way)."""
+    prev = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def default_parallelism() -> int:

@@ -9,7 +9,10 @@ pipeline functions.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,72 +20,41 @@ from pyspark.sql import functions as F
 from ..session import apply_engine_confs
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream the events table from parquet with normalized TIMESTAMP ts.
+def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Stream one table of an sf dir from parquet, one file per micro-batch.
 
     ``maxFilesPerTrigger=1`` keeps micro-batches bounded; the file source
     checkpoints file names, so semantics mirror a replayed Kafka topic.
+    The file source requires a directory, so ``pathGlobFilter`` narrows
+    the sf dir down to ``<table>.parquet``.
 
     The readStream schema is taken from the file's own footer (a
     metadata-only batch read) rather than hardcoded: driver testdata has
-    shipped ``ts`` both as parquet TIMESTAMP(NANOS) — surfaced as a
-    nanosecond long under ``spark.sql.legacy.parquet.nanosAsLong`` — and
+    shipped events' ``ts`` both as parquet TIMESTAMP(NANOS) — surfaced as
+    a nanosecond long under ``spark.sql.legacy.parquet.nanosAsLong`` — and
     as TIMESTAMP(MICROS); a fixed long-typed schema silently misreads the
     micros variant 1000x off, which moves every event inside any join
-    band. Normalization mirrors sources/batch.py.
+    band. A ``ts`` column is normalized as sources/batch.py does it.
+    Tables without one (documents, embeddings) have no event time, so
+    their consumers aggregate in complete/update mode or fold per batch
+    rather than use watermarks.
     """
     apply_engine_confs(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(path).schema
-    # The file source requires a directory; glob-filter down to the events
-    # table inside the sf dir.
+    schema = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet")).schema
     raw = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
+        .option("pathGlobFilter", f"{table}.parquet")
         .parquet(sf_dir)
     )
     # Watermarks require TIMESTAMP (not NTZ); with the session pinned to
     # UTC this is the same wall-clock instant as the batch twin's NTZ view.
-    ts_type = dict(raw.dtypes)["ts"]
+    ts_type = dict(raw.dtypes).get("ts")
+    if ts_type is None:
+        return raw
     if ts_type == "bigint":  # nanosecond long → truncate to micros
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream the documents table from parquet (schema from the footer —
-    same round-robustness rationale as :func:`events_stream`; documents
-    has no event-time column, so consumers aggregate in complete/update
-    mode rather than with watermarks)."""
-    apply_engine_confs(spark)
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-
-
-def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream the embeddings table from parquet (schema from the footer;
-    no event-time column — consumers treat rows as an arrival tape, e.g.
-    the ANN serving fold answers each micro-batch of query vectors
-    against a frozen index)."""
-    apply_engine_confs(spark)
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    schema = spark.read.parquet(path).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
-
-
-import contextlib  # noqa: E402
 
 
 def one_row_frame(spark: SparkSession, row: tuple, schema: str) -> DataFrame:
@@ -125,9 +97,6 @@ def replay_tape(base_df: DataFrame, sentinel_dfs: list[DataFrame]):
       (positive non-existent keys, event_type admitted by the side
       filters — see q_streaming_anti_join's pushdown-starvation note).
     """
-    import shutil
-    import tempfile
-
     tape = tempfile.mkdtemp(prefix="replay_tape_")
     try:
         base_df.coalesce(1).write.mode("append").parquet(tape)

@@ -20,11 +20,15 @@ Output modes (SURVEY §2.9 ST3):
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.ohlc import ohlc_aggregates
 from .checkpoints import stream_start
+
+_drain_ids = itertools.count()
 
 
 def streaming_ohlc_candles(
@@ -97,7 +101,6 @@ def stream_state_partitions() -> int:
 
 def run_to_memory(
     stream_df: DataFrame,
-    table_name: str,
     output_mode: str = "complete",
     partitions: int | None = None,
 ) -> DataFrame:
@@ -107,6 +110,8 @@ def run_to_memory(
     This is the test/oracle harness for streaming operators: availableNow
     processes all available input then stops, so the memory table holds the
     stream's final answer. Spark session must own the stream's source.
+    The query and its table get a fresh name per call, so drains in one
+    session never collide; callers use the returned table, not the name.
 
     The query starts under :func:`~.checkpoints.stream_start`, in
     :func:`stream_state_partitions` state stores unless ``partitions`` is
@@ -117,6 +122,7 @@ def run_to_memory(
     16).
     """
     spark = stream_df.sparkSession
+    table_name = f"drain_{next(_drain_ids)}"
     with stream_start(spark, None, partitions):
         query = (
             stream_df.writeStream.format("memory")

@@ -27,10 +27,13 @@ the one place that sets stream-start confs:
 from __future__ import annotations
 
 import contextlib
+import itertools
 import os
 import shutil
 import tempfile
 from urllib.parse import urlsplit
+
+from ..session import scoped_confs
 
 #: Spark's rename-based checkpoint file manager, used for local roots.
 RENAME_MANAGER = (
@@ -39,6 +42,8 @@ RENAME_MANAGER = (
 )
 MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 PARTITIONS_CONF = "spark.sql.shuffle.partitions"
+
+_fold_ids = itertools.count()
 
 
 class CheckpointManager:
@@ -107,34 +112,41 @@ def stream_start(spark, checkpoint: str | None, partitions: int | None = None):
     )
     if is_local_checkpoint(checkpoint, default_fs):
         confs[MANAGER_CONF] = RENAME_MANAGER
-    prev = {key: spark.conf.get(key, None) for key in confs}
-    for key, value in confs.items():
-        spark.conf.set(key, value)
-    try:
+    with scoped_confs(spark, confs):
         yield
-    finally:
-        for key, value in prev.items():
-            if value is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, value)
 
 
-def run_foreach_batch(stream_df, batch_fn, name: str) -> None:
-    """Run a bounded stream through ``foreachBatch`` to completion under
-    an ephemeral checkpoint — the shared driver for every fold-style
-    registry query (incremental candles, as-of enrich, rolling actives).
-    One site owns the writeStream wiring AND the cleanup contract. The
-    folds keep no streaming state, and their batch work keeps the
-    session's shuffle-partition count."""
+def fold_stream(stream_df, step, state=None):
+    """Fold a bounded stream batch by batch: ``state = step(state,
+    batch_df)`` once per micro-batch, then return the final state — the
+    one ``foreachBatch`` loop for every fold-style query (incremental
+    candles, as-of enrich, rolling actives, ANN and BPE serving, ...).
+
+    It owns the query name, an ephemeral checkpoint that is always
+    removed, and the ``availableNow`` trigger. The folds keep no
+    streaming state, and their batch work keeps the session's
+    shuffle-partition count. Raises ``RuntimeError`` when no micro-batch
+    ran, whatever the start state: a fold over nothing has no answer.
+    """
     spark = stream_df.sparkSession
+    name = f"fold_{next(_fold_ids)}"
+    batches = 0
+
+    def on_batch(batch_df, _batch_id):
+        nonlocal state, batches
+        state = step(state, batch_df)
+        batches += 1
+
     with ephemeral_checkpoint(name) as ckpt:
         with stream_start(spark, ckpt, int(spark.conf.get(PARTITIONS_CONF))):
             query = (
-                stream_df.writeStream.foreachBatch(batch_fn)
+                stream_df.writeStream.foreachBatch(on_batch)
                 .queryName(name)
                 .trigger(availableNow=True)
                 .option("checkpointLocation", ckpt)
                 .start()
             )
         query.awaitTermination()
+    if not batches:
+        raise RuntimeError("stream produced no micro-batches")
+    return state

@@ -12,6 +12,13 @@ from ohlc_spark_streaming_spark.session import build_session  # noqa: E402
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
+#: The RocksDB state-store provider, for ``session.scoped_confs``.
+ROCKSDB_CONFS = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+}
+
 
 @pytest.fixture(scope="session")
 def spark():

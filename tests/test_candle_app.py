@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ohlc_spark_streaming_spark.operators.ohlc import ohlc_candles
 from ohlc_spark_streaming_spark.operators.trades import trades_from_wire
 from ohlc_spark_streaming_spark.queries.reference import _wire_trades
-from ohlc_spark_streaming_spark.sources.stream import events_stream
+from ohlc_spark_streaming_spark.sources.stream import table_stream
 from ohlc_spark_streaming_spark.streaming import checkpoints as ckpt
 from ohlc_spark_streaming_spark.streaming.app import build_app
 from ohlc_spark_streaming_spark.streaming.candles import (
@@ -90,12 +90,19 @@ def _stream_confs(spark) -> dict:
 
 
 def test_run_to_memory_restores_session_confs(tmp_path, spark):
+    """The stream-start confs are restored, and each drain names its own
+    table: two drains in one session add two tables, each with its own
+    answer."""
     before = _stream_confs(spark)
+    tables = {t.name for t in spark.catalog.listTables()}
     src = str(tmp_path / "src")
     spark.range(20).write.parquet(src)
     stream = spark.readStream.schema("id long").parquet(src)
-    out = run_to_memory(stream.groupBy().count(), "restore_probe")
+    out = run_to_memory(stream.groupBy().count())
+    evens = run_to_memory(stream.where("id % 2 = 0").groupBy().count())
     assert out.collect()[0][0] == 20
+    assert evens.collect()[0][0] == 10
+    assert len({t.name for t in spark.catalog.listTables()} - tables) == 2
     assert _stream_confs(spark) == before
 
 
@@ -106,7 +113,7 @@ def test_candle_app_runs_two_stores_at_4_cores(monkeypatch, tmp_path, spark):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
     before = _stream_confs(spark)
     app = build_app(
-        _wire_trades(events_stream(spark, SF_SMOKE)),
+        _wire_trades(table_stream(spark, SF_SMOKE, "events")),
         CheckpointManager(str(tmp_path / "ckpts")),
         with_taps=False,
         available_now=True,

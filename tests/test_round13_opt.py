@@ -7,10 +7,6 @@ pre-optimization relational forms bitwise.
   out inline as the reference.
 * suffix_rank_tables pairs shifted ranks via lead(r, d) over (doc, pos)
   — pinned against the old (doc, pos+d) self-join.
-* sources.stream.one_row_frame must be SINGLE-partition (the sentinel
-  fix: a default createDataFrame spreads one row over
-  defaultParallelism Python-backed partitions and replay_tape's
-  coalesce(1) then pays them sequentially).
 """
 
 from __future__ import annotations
@@ -184,11 +180,3 @@ def test_suffix_rank_pairing_matches_join_form(spark):
     }
     want = {(r["doc_id"], r["pos"]): r["r"] for r in ref2.collect()}
     assert got == want
-
-
-def test_one_row_frame_is_single_partition(spark):
-    from ohlc_spark_streaming_spark.sources.stream import one_row_frame
-
-    df = one_row_frame(spark, (1, "x"), "a long, b string")
-    assert df.rdd.getNumPartitions() == 1
-    assert df.collect() == [(1, "x")]

@@ -9,14 +9,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from ohlc_spark_streaming_spark.operators.ohlc import ohlc_candles
+from ohlc_spark_streaming_spark.session import scoped_confs
 from ohlc_spark_streaming_spark.sources.batch import load_table
-from ohlc_spark_streaming_spark.sources.stream import events_stream
+from ohlc_spark_streaming_spark.sources.stream import table_stream
 from ohlc_spark_streaming_spark.streaming.candles import (
     run_to_memory,
     streaming_ohlc_candles,
 )
 
-from .conftest import SF_SMOKE
+from .conftest import ROCKSDB_CONFS, SF_SMOKE
 
 KW = dict(ts_col="ts", symbol_col="event_type", price_col="value", qty_col=None,
           window_duration="1 hour")
@@ -67,39 +68,26 @@ def test_bucketed_join_avoids_shuffle(spark):
 def test_rocksdb_state_store_parity(spark):
     """The RocksDB state store (the 100 TB keyspace choice, SURVEY §4.2)
     produces the same streaming answer as the default HDFS-backed store."""
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", ""
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_confs(spark, ROCKSDB_CONFS):
         out = run_to_memory(
             streaming_ohlc_candles(
-                events_stream(spark, SF_SMOKE), watermark_delay="2 minutes", **KW
+                table_stream(spark, SF_SMOKE, "events"),
+                watermark_delay="2 minutes",
+                **KW,
             ),
-            "rocksdb_parity",
             output_mode="complete",
         )
-        batch = ohlc_candles(load_table(spark, SF_SMOKE, "events"), **KW)
-        assert sorted(map(tuple, out.collect())) == sorted(
-            map(tuple, batch.collect())
-        )
-    finally:
-        if prev:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    batch = ohlc_candles(load_table(spark, SF_SMOKE, "events"), **KW)
+    assert sorted(map(tuple, out.collect())) == sorted(
+        map(tuple, batch.collect())
+    )
 
 
 def test_concurrent_streaming_queries(spark):
     """The reference runs 5 concurrent queries over one source
     (/root/reference/main.py:98-216); verify independent concurrent
     incremental plans + awaitAnyTermination semantics."""
-    stream = events_stream(spark, SF_SMOKE)
+    stream = table_stream(spark, SF_SMOKE, "events")
     candles = streaming_ohlc_candles(stream, watermark_delay="2 minutes", **KW)
     raw_tap = stream.select("event_id", "ts", "event_type")
 

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ohlc_spark_streaming_spark.sinks.files import parquet_stream_writer, write_parquet
 from ohlc_spark_streaming_spark.sources.batch import load_table
-from ohlc_spark_streaming_spark.sources.stream import events_stream
+from ohlc_spark_streaming_spark.sources.stream import table_stream
 
 from .conftest import SF_SMOKE
 
@@ -37,7 +37,9 @@ def test_partitioned_parquet_roundtrip(tmp_path, spark):
 def test_streaming_parquet_sink(tmp_path, spark):
     out = str(tmp_path / "stream_out")
     ckpt = str(tmp_path / "ckpt")
-    stream = events_stream(spark, SF_SMOKE).select("event_id", "ts", "event_type")
+    stream = table_stream(spark, SF_SMOKE, "events").select(
+        "event_id", "ts", "event_type"
+    )
     q = (
         parquet_stream_writer(stream, out, ckpt, query_name="pq_sink_test")
         .trigger(availableNow=True)

@@ -5,14 +5,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ohlc_spark_streaming_spark.operators.ohlc import ohlc_candles
+from ohlc_spark_streaming_spark.session import scoped_confs
 from ohlc_spark_streaming_spark.sources.batch import load_table
-from ohlc_spark_streaming_spark.sources.stream import events_stream
+from ohlc_spark_streaming_spark.sources.stream import table_stream
 from ohlc_spark_streaming_spark.streaming.candles import (
     run_to_memory,
     streaming_ohlc_candles,
 )
 
-from .conftest import SF_SMOKE
+from .conftest import ROCKSDB_CONFS, SF_SMOKE
 
 KW = dict(ts_col="ts", symbol_col="event_type", price_col="value", qty_col=None,
           window_duration="1 hour")
@@ -20,10 +21,9 @@ KW = dict(ts_col="ts", symbol_col="event_type", price_col="value", qty_col=None,
 
 def test_streaming_complete_equals_batch(spark):
     """Complete-mode bounded replay must equal the batch answer exactly."""
-    stream = events_stream(spark, SF_SMOKE)
+    stream = table_stream(spark, SF_SMOKE, "events")
     out = run_to_memory(
         streaming_ohlc_candles(stream, watermark_delay="2 minutes", **KW),
-        "parity_complete",
         output_mode="complete",
     )
     batch = ohlc_candles(load_table(spark, SF_SMOKE, "events"), **KW)
@@ -34,10 +34,9 @@ def test_streaming_append_withholds_unclosed_windows(spark):
     """Append mode emits only windows finalized by the watermark: on a
     bounded replay the trailing window(s) past (max_ts - delay) are
     withheld (SURVEY §2.9 ST3/ST6)."""
-    stream = events_stream(spark, SF_SMOKE)
+    stream = table_stream(spark, SF_SMOKE, "events")
     out = run_to_memory(
         streaming_ohlc_candles(stream, watermark_delay="2 minutes", **KW),
-        "parity_append",
         output_mode="append",
     )
     batch = ohlc_candles(load_table(spark, SF_SMOKE, "events"), **KW)
@@ -56,10 +55,9 @@ def test_streaming_update_mode_refines_to_batch(spark):
     """Update mode (reference behavior, main.py:215) re-emits a key each
     time its state changes; every key's FINAL emission equals the batch
     answer, so batch rows are a subset of the union of emissions."""
-    stream = events_stream(spark, SF_SMOKE)
+    stream = table_stream(spark, SF_SMOKE, "events")
     out = run_to_memory(
         streaming_ohlc_candles(stream, watermark_delay="2 minutes", **KW),
-        "parity_update",
         output_mode="update",
     )
     batch = ohlc_candles(load_table(spark, SF_SMOKE, "events"), **KW)
@@ -74,12 +72,11 @@ def test_dedup_within_watermark_bounds(spark):
     from ohlc_spark_streaming_spark.sources.batch import load_table as lt
     from ohlc_spark_streaming_spark.streaming.dedup import dedup_within_watermark
 
-    stream = events_stream(spark, SF_SMOKE)
+    stream = table_stream(spark, SF_SMOKE, "events")
     out = run_to_memory(
         dedup_within_watermark(
             stream, ["user_id", "event_type"], ts_col="ts", delay="2 minutes"
         ).select("user_id", "event_type"),
-        "dedup_wm",
         output_mode="append",
     )
     batch = lt(spark, SF_SMOKE, "events")
@@ -114,7 +111,7 @@ def test_stateful_counts_carry_across_batches(tmp_path, spark):
         .parquet(src)
     )
     emissions = stateful_event_counts(stream)
-    log = run_to_memory(emissions, "stateful_split_log", output_mode="update")
+    log = run_to_memory(emissions, output_mode="update")
     got = {
         (r.user_id, r.n_errors) for r in final_counts(log).collect()
     }
@@ -179,7 +176,7 @@ def test_foreach_batch_tap(tmp_path, spark):
     def tap(batch_df, batch_id):
         seen.append((batch_id, batch_df.count()))
 
-    stream = events_stream(spark, SF_SMOKE).select("event_id", "event_type")
+    stream = table_stream(spark, SF_SMOKE, "events").select("event_id", "event_type")
     q = (
         stream.writeStream.foreachBatch(tap)
         .trigger(availableNow=True)
@@ -198,7 +195,7 @@ def test_trade_candle_app_topology(tmp_path, spark):
     from ohlc_spark_streaming_spark.streaming.app import build_app
     from ohlc_spark_streaming_spark.streaming.checkpoints import CheckpointManager
 
-    wire = _wire_trades(events_stream(spark, SF_SMOKE))
+    wire = _wire_trades(table_stream(spark, SF_SMOKE, "events"))
     app = build_app(
         wire,
         CheckpointManager(str(tmp_path / "ckpts")),
@@ -226,10 +223,9 @@ def test_streaming_minute_candles_roll_up_to_batch_hourly(spark):
     from ohlc_spark_streaming_spark.operators.ohlc import ohlc_rollup
 
     fine_kw = {**KW, "window_duration": "1 minute"}
-    stream = events_stream(spark, SF_SMOKE)
+    stream = table_stream(spark, SF_SMOKE, "events")
     fine = run_to_memory(
         streaming_ohlc_candles(stream, watermark_delay="2 minutes", **fine_kw),
-        "rollup_fine",
         output_mode="complete",
     )
     hourly = ohlc_rollup(fine, coarse="1 hour")
@@ -266,11 +262,10 @@ def test_streaming_left_outer_interval_join(spark):
         key="key_id", left_ts="purchase_ts", right_ts="view_ts",
         lookback="2 hours", watermark="1 hour",
     )
-    sp, sv = sides(events_stream(spark, SF_SMOKE))
+    sp, sv = sides(table_stream(spark, SF_SMOKE, "events"))
     out = run_to_memory(
         interval_join_left_outer(sp, sv, **kw)
         .select("purchase_id", "view_id"),
-        "loj_interval",
         output_mode="append",
     )
     bp, bv = sides(load_table(spark, SF_SMOKE, "events"))
@@ -318,11 +313,10 @@ def test_streaming_full_outer_interval_join(spark):
         key="key_id", left_ts="purchase_ts", right_ts="view_ts",
         lookback="2 hours", watermark="1 hour",
     )
-    sp, sv = sides(events_stream(spark, SF_SMOKE))
+    sp, sv = sides(table_stream(spark, SF_SMOKE, "events"))
     out = run_to_memory(
         interval_join_full_outer(sp, sv, **kw)
         .select("purchase_id", "view_id"),
-        "foj_interval",
         output_mode="append",
     )
     bp, bv = sides(load_table(spark, SF_SMOKE, "events"))
@@ -373,10 +367,9 @@ def test_streaming_left_anti_interval_join(spark):
         key="key_id", left_ts="purchase_ts", right_ts="view_ts",
         lookback="2 hours", watermark="1 hour",
     )
-    sp, sv = sides(events_stream(spark, SF_SMOKE))
+    sp, sv = sides(table_stream(spark, SF_SMOKE, "events"))
     out = run_to_memory(
         interval_join_left_anti(sp, sv, **kw).select("purchase_id"),
-        "anti_interval",
         output_mode="append",
     )
     bp, bv = sides(load_table(spark, SF_SMOKE, "events"))
@@ -428,14 +421,14 @@ def test_streaming_native_left_anti_unsupported(spark):
         )
         return purchases, views
 
-    sp, sv = sides(events_stream(spark, SF_SMOKE))
+    sp, sv = sides(table_stream(spark, SF_SMOKE, "events"))
     native = _interval_join(
         sp, sv, "key_id", "purchase_ts", "view_ts",
         "2 hours", "1 hour", "left_anti",
     )
     with pytest.raises(Exception, match="(?i)anti|not supported"):
         run_to_memory(
-            native.select("purchase_id"), "anti_native", output_mode="append"
+            native.select("purchase_id"), output_mode="append"
         )
 
 
@@ -461,22 +454,11 @@ def test_tws_event_counts_parity(spark):
         tws_event_counts,
     )
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_confs(spark, ROCKSDB_CONFS):
         log = run_to_memory(
-            tws_event_counts(events_stream(spark, SF_SMOKE)),
-            "tws_parity",
+            tws_event_counts(table_stream(spark, SF_SMOKE, "events")),
             output_mode="update",
         )
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     got = final_counts(log)
     want = (
         load_table(spark, SF_SMOKE, "events")
@@ -496,7 +478,7 @@ def test_incremental_materialization_compacts_to_batch(tmp_path, spark):
     from pyspark.sql import Window
 
     out_dir = str(tmp_path / "candle_changelog")
-    stream = events_stream(spark, SF_SMOKE)
+    stream = table_stream(spark, SF_SMOKE, "events")
     candles = streaming_ohlc_candles(stream, watermark_delay="2 minutes", **KW)
 
     def sink(batch_df, batch_id):
@@ -569,7 +551,7 @@ def test_stateful_gaps_carry_across_batches(tmp_path, spark):
         .parquet(str(src / "part_*"))
     )
     gaps = stateful_interarrival_gaps(stream)
-    log = run_to_memory(gaps, "stateful_gap_log", output_mode="append")
+    log = run_to_memory(gaps, output_mode="append")
 
     got = sorted(
         (r.event_type, r.gap_us) for r in log.collect()
@@ -635,7 +617,6 @@ def test_stateful_guard_rejects_out_of_order_batches(tmp_path, spark):
     with pytest.raises(Exception, match="out-of-order cross-batch arrival"):
         run_to_memory(
             stateful_interarrival_gaps(stream),
-            "stateful_guard_log",
             output_mode="append",
         )
 
@@ -743,7 +724,7 @@ def test_stateful_transitions_carry_across_batches(tmp_path, spark):
         .parquet(str(src / "part_*"))
     )
     log = run_to_memory(
-        stateful_transitions(stream), "stateful_tr_log", output_mode="append"
+        stateful_transitions(stream), output_mode="append"
     )
 
     got = sorted((r.from_type, r.to_type) for r in log.collect())

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ohlc_spark_streaming_spark import registry
 from ohlc_spark_streaming_spark._compat import ensure_protobuf
+from ohlc_spark_streaming_spark.session import scoped_confs
 from ohlc_spark_streaming_spark.sources.batch import load_table
 from ohlc_spark_streaming_spark.streaming.neardup import (
     _bucket_emit,
@@ -22,7 +23,7 @@ from ohlc_spark_streaming_spark.streaming.neardup import (
     tws_lsh_candidates,
 )
 
-from .conftest import SF_SMOKE
+from .conftest import ROCKSDB_CONFS, SF_SMOKE
 
 needs_protobuf = pytest.mark.skipif(
     not ensure_protobuf(),
@@ -77,7 +78,6 @@ def test_lsh_candidates_across_batches(tmp_path, spark):
     cand = _run_tws(
         spark,
         lambda: tws_lsh_candidates(lsh_band_rows(stream)),
-        "tws_lsh_tape",
         "append",
     )
     got = neardup_finalize(cand, docs, threshold=0.7)
@@ -110,7 +110,6 @@ def test_identical_copies_add_no_candidates(tmp_path, spark):
         return _run_tws(
             spark,
             lambda: tws_lsh_candidates(lsh_band_rows(stream)),
-            f"tws_lsh_{tag}",
             "append",
         )
 
@@ -143,13 +142,6 @@ def test_lsh_state_survives_checkpoint_restart(tmp_path, spark):
     second = docs.where(F.col("doc_id") % 2 == 1)
     first.coalesce(1).write.mode("overwrite").parquet(src)
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-
     def run_once(tag):
         out = str(tmp_path / f"log_{tag}")
 
@@ -172,18 +164,11 @@ def test_lsh_state_survives_checkpoint_restart(tmp_path, spark):
         q.awaitTermination()
         return spark.read.parquet(out)
 
-    try:
+    with scoped_confs(spark, ROCKSDB_CONFS):
         log1 = run_once("lsh_ckpt_1")
         n1 = log1.count()
         second.coalesce(1).write.mode("append").parquet(src)
         log2 = run_once("lsh_ckpt_2")
-    finally:
-        if prev:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
     # run 2 did not re-emit run 1's pairs (offsets + state restored)
     assert log1.count() == n1

@@ -15,9 +15,10 @@ from pyspark.sql import functions as F
 
 from ohlc_spark_streaming_spark import registry
 from ohlc_spark_streaming_spark._compat import ensure_protobuf
+from ohlc_spark_streaming_spark.session import scoped_confs
 from ohlc_spark_streaming_spark.sources.batch import load_table
 
-from .conftest import SF_SMOKE
+from .conftest import ROCKSDB_CONFS, SF_SMOKE
 
 needs_protobuf = pytest.mark.skipif(
     not ensure_protobuf(),
@@ -47,7 +48,7 @@ def test_tws_gaps_valuestate_equals_mapstate(spark):
     logs — the registry entry runs the MapState variant for ~|types|x
     fewer Arrow crossings; this pins the equivalence."""
     from ohlc_spark_streaming_spark.queries.streaming import _run_tws
-    from ohlc_spark_streaming_spark.sources.stream import events_stream
+    from ohlc_spark_streaming_spark.sources.stream import table_stream
     from ohlc_spark_streaming_spark.streaming.stateful import (
         tws_interarrival_gaps,
         tws_interarrival_gaps_mapstate,
@@ -55,14 +56,14 @@ def test_tws_gaps_valuestate_equals_mapstate(spark):
 
     val = _run_tws(
         spark,
-        lambda: tws_interarrival_gaps(events_stream(spark, SF_SMOKE)),
-        "tws_gaps_val",
+        lambda: tws_interarrival_gaps(table_stream(spark, SF_SMOKE, "events")),
         "append",
     )
     mp = _run_tws(
         spark,
-        lambda: tws_interarrival_gaps_mapstate(events_stream(spark, SF_SMOKE)),
-        "tws_gaps_map",
+        lambda: tws_interarrival_gaps_mapstate(
+            table_stream(spark, SF_SMOKE, "events")
+        ),
         "append",
     )
     assert _rows(val) == _rows(mp)
@@ -138,12 +139,6 @@ def test_tws_state_survives_checkpoint_restart(tmp_path, spark):
     first = events.limit(n_total // 2)
     first.coalesce(1).write.mode("overwrite").parquet(src)
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
     def run_once(tag):
         # foreachBatch parquet log: the memory sink can't recover from a
         # checkpoint; a foreachBatch sink can (offsets journaled, state
@@ -169,7 +164,7 @@ def test_tws_state_survives_checkpoint_restart(tmp_path, spark):
         q.awaitTermination()
         return spark.read.parquet(out)
 
-    try:
+    with scoped_confs(spark, ROCKSDB_CONFS):
         log1 = run_once("tws_ckpt_run1")
         counts1 = {
             r.user_id: r.n_errors
@@ -180,11 +175,6 @@ def test_tws_state_survives_checkpoint_restart(tmp_path, spark):
         # Second file lands; restart from the same checkpoint.
         events.exceptAll(first).coalesce(1).write.mode("append").parquet(src)
         log2 = run_once("tws_ckpt_run2")
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
     # Run 2 saw only the delta: its emission log covers just the keys in
     # the new file (strictly fewer emissions than a full reprocess).
@@ -241,12 +231,7 @@ def test_tws_ttl_requires_processing_time_mode(tmp_path, spark):
     events = load_table(spark, SF_SMOKE, "events").where("event_type = 'error'")
     events.limit(50).coalesce(1).write.mode("overwrite").parquet(src)
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_confs(spark, ROCKSDB_CONFS):
         stream = spark.readStream.schema(events.schema).parquet(src)
         q = (
             stream.groupBy("user_id")
@@ -262,15 +247,11 @@ def test_tws_ttl_requires_processing_time_mode(tmp_path, spark):
             .trigger(availableNow=True)
             .start()
         )
-        with pytest.raises(Exception, match="TIME_MODE_TO_ASSIGN_TTL|TTL"):
-            q.awaitTermination()
-    finally:
-        for q in spark.streams.active:
+        try:
+            with pytest.raises(Exception, match="TIME_MODE_TO_ASSIGN_TTL|TTL"):
+                q.awaitTermination()
+        finally:
             q.stop()
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 @needs_protobuf

@@ -122,7 +122,6 @@ def test_session_timers_across_batches(tmp_path, spark):
     log = _run_tws(
         spark,
         lambda: tws_session_timers(stream),
-        "tws_session_tape",
         "append",
     )
     got = session_timers_rollup(log)
@@ -178,7 +177,7 @@ def test_ttl_illegal_under_event_time(tmp_path, spark):
         )
 
     with pytest.raises(Exception, match="TIME_MODE_TO_ASSIGN_TTL"):
-        _run_tws(spark, build, "tws_ttl_eventtime_probe", "append")
+        _run_tws(spark, build, "append")
 
 
 def test_chained_dedup_candles_negative_control(spark):
@@ -187,7 +186,7 @@ def test_chained_dedup_candles_negative_control(spark):
     must double volume/n_trades (and the chained registry entry must
     equal the batch flagship exactly)."""
     from ohlc_spark_streaming_spark.operators.ohlc import ohlc_aggregates
-    from ohlc_spark_streaming_spark.sources.stream import events_stream
+    from ohlc_spark_streaming_spark.sources.stream import table_stream
     from ohlc_spark_streaming_spark.streaming.candles import run_to_memory
 
     chained = registry.QUERIES["streaming_dedup_then_candles"](
@@ -196,8 +195,8 @@ def test_chained_dedup_candles_negative_control(spark):
     batch = registry.QUERIES["ohlc_candles"](spark, SF_SMOKE)
     assert _rows(chained) == _rows(batch)
 
-    dup = events_stream(spark, SF_SMOKE).unionByName(
-        events_stream(spark, SF_SMOKE)
+    dup = table_stream(spark, SF_SMOKE, "events").unionByName(
+        table_stream(spark, SF_SMOKE, "events")
     )
     no_dedup = (
         dup.withWatermark("ts", "2 minutes")
@@ -212,7 +211,7 @@ def test_chained_dedup_candles_negative_control(spark):
             "volume",
         )
     )
-    doubled = run_to_memory(no_dedup, "chain_neg_ctl", output_mode="complete")
+    doubled = run_to_memory(no_dedup, output_mode="complete")
     vol = {(r.ws, r.symbol): r.volume for r in doubled.collect()}
     want = {
         (r.window_start, r.symbol): r.volume for r in batch.collect()

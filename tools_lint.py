@@ -134,16 +134,24 @@ CKPT_ALLOWED = {
 }
 #: The one file allowed to name the checkpoint file manager conf.
 CKPT_MANAGER_OWNER = "streaming/checkpoints.py"
+#: The one file allowed to write session confs (scoped_confs,
+#: apply_engine_confs).
+CONF_OWNER = "session.py"
 
 
 def lint_checkpoint_hygiene() -> list[tuple[str, str, str]]:
     """Source lint (CKPT_RAW): any raw ``checkpointLocation`` option or
     checkpoint-prefixed mkdtemp outside the allowlist is an error —
     query code must route through streaming/checkpoints.py's
-    ephemeral_checkpoint / run_foreach_batch so the leak fix of c09363f
+    ephemeral_checkpoint / fold_stream so the leak fix of c09363f
     stays structural rather than per-site (VERDICT r9 item 8). Naming
     ``checkpointFileManagerClass`` anywhere but streaming/checkpoints.py
-    is an error too: ``stream_start`` alone picks the manager."""
+    is an error too: ``stream_start`` alone picks the manager.
+
+    CONF_RAW: a ``conf.set(`` / ``conf.unset(`` outside session.py is an
+    error — a conf changed for a block goes through
+    ``session.scoped_confs``, which restores it even when the block
+    raises."""
     import pathlib
 
     pkg = pathlib.Path(__file__).parent / "ohlc_spark_streaming_spark"
@@ -163,6 +171,17 @@ def lint_checkpoint_hygiene() -> list[tuple[str, str, str]]:
                         "CKPT_RAW",
                         f"{rel}:{ln}: raw checkpoint wiring — use "
                         "streaming/checkpoints.py helpers",
+                    )
+                )
+            if rel != CONF_OWNER and (
+                "conf.set(" in line or "conf.unset(" in line
+            ):
+                bad.append(
+                    (
+                        rel,
+                        "CONF_RAW",
+                        f"{rel}:{ln}: raw session conf write — use "
+                        "session.scoped_confs",
                     )
                 )
     return bad

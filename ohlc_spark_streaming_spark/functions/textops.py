@@ -1,4 +1,4 @@
-"""Text-analysis expressions: tokenization, shingles, quality features.
+"""Text-analysis expressions: tokenization, n-grams, quality features.
 
 Whitespace tokenization is the contract (matches DuckDB ``string_split``
 exactly, including empty-string behavior on clean single-spaced text); a
@@ -24,17 +24,6 @@ def tokens(col) -> Column:
     """Whitespace tokens (the cross-engine tokenization contract)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.split(c, " ")
-
-
-def shingles(col, n: int = 3) -> Column:
-    """Token n-grams (shingles) as space-joined strings — the MinHash /
-    Jaccard input unit. Sliding slice over the token array; documents
-    shorter than n tokens yield their full token string as one shingle."""
-    toks = tokens(col)
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
-    return F.transform(
-        idx, lambda i: F.array_join(F.slice(toks, i, n), " ")
-    )
 
 
 def bigrams_col(toks: Column) -> Column:

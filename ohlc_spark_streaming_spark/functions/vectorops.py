@@ -40,13 +40,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def vdiff(a: Column, b: Column) -> Column:
-    """Elementwise difference a - b (exact IEEE subtraction per component,
-    so residual vectors are bitwise cross-engine — the residual-IVF-PQ
-    determinism hinge)."""
-    return F.zip_with(a, b, lambda x, y: x - y)
-
-
 def sqdist(a: Column, b: Column) -> Column:
     """Sequential-fold squared L2 distance (deterministic summation)."""
     return F.aggregate(

@@ -2,10 +2,11 @@
 
 The reference has no joins; this is the engine's relational extension. All
 standard joins are thin wrappers over built-ins (Catalyst picks
-broadcast/sort-merge/shuffled-hash; callers can pass hints). The one join
-needing real design work is the **as-of join** — Spark has no primitive for
-it, and the naive theta-join (``l.ts >= r.ts`` + max) explodes to
-O(|L|·|R|) per key. We implement the union+window formulation, which scales:
+broadcast/sort-merge/shuffled-hash; ``equi_join`` can pin a broadcast).
+The one join needing real design work is the **as-of join** — Spark has
+no primitive for it, and the naive theta-join (``l.ts >= r.ts`` + max)
+explodes to O(|L|·|R|) per key. We implement the union+window formulation,
+which scales:
 
 1. union LEFT (probe) and RIGHT (reference) rows on (key, ts) with a side
    marker, RIGHT sorting before LEFT at equal timestamps (inclusive match);
@@ -283,60 +284,3 @@ def asof_join_bucketed(
         for c in right_payload
     )
     return matched.select(*out_cols)
-
-
-def hinted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on,
-    how: str = "inner",
-    strategy: str | None = None,
-) -> DataFrame:
-    """Equi-join with an explicit strategy hint on the RIGHT side:
-    ``broadcast`` | ``merge`` | ``shuffle_hash`` | ``shuffle_replicate_nl``
-    (SURVEY §2.3). Hints override the planner's size-estimate choice —
-    use when statistics mislead (e.g. a filtered dim the planner still
-    thinks is big, or a big-big join where sort-merge spills and
-    shuffle-hash fits)."""
-    if strategy is not None:
-        right = right.hint(strategy)
-    return left.join(right, on, how)
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    salt_source,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant shuffled equi-join on column ``on``.
-
-    For a hot join key that AQE's skew splitting can't fix (e.g. the skew
-    is in the RUNTIME key distribution of a stream-static join, or AQE is
-    unavailable), shard the big side deterministically: ``_salt =
-    pmod(hash(salt_source), n_salts)`` on a high-cardinality BIG-side
-    column, replicate the small side once per salt, and equi-join on
-    ``(on, _salt)``. Each hot key now occupies ``n_salts`` reducers
-    instead of one. For ``inner``/``left`` the output is identical to the
-    plain join because every big row meets exactly the one replica
-    carrying its salt; ``right``/``full`` are rejected — an unmatched
-    small-side row would be emitted once per salt replica.
-
-    The salt must be DETERMINISTIC (hash of data, never rand()): retried
-    tasks must land rows on the same shard or exactly-once breaks.
-    Replication multiplies the small side by ``n_salts`` — keep it for
-    genuinely small-but-unbroadcastable sides.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_join supports how='inner'|'left', got {how!r}: "
-            "unmatched small-side rows would duplicate once per salt"
-        )
-    s = F.col(salt_source) if isinstance(salt_source, str) else salt_source
-    b = big.withColumn("_salt", F.pmod(F.hash(s), F.lit(n_salts)))
-    sm = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return b.join(sm, [on, "_salt"], how).drop("_salt")

@@ -1,14 +1,12 @@
-"""Data-layout operators: Z-order clustering for multi-dimensional scans
-(public technique: Morton codes / Z-order curves, used by every lakehouse
-engine for file skipping).
+"""Data-layout operators: the Z-order (Morton) value for multi-dimensional
+clustering (public technique: Morton codes / Z-order curves, used by every
+lakehouse engine for file skipping).
 
 A parquet scan prunes row groups by min/max statistics. Sorting by ONE
 column gives perfect pruning on that column and none on others; sorting
 by the Z-VALUE (bit-interleave of several columns) bounds every file to a
 small hyper-rectangle of the key space, so range predicates on ANY of the
-interleaved columns skip most files. At 100 TB this is the difference
-between a full scan and touching a few percent of files for point-ish
-multi-column queries.
+interleaved columns skip most files.
 
 The Z-value is pure integer bit arithmetic — deterministic, and exactly
 replayable by the DuckDB oracle (queries: zorder_bucket_counts).
@@ -16,7 +14,7 @@ replayable by the DuckDB oracle (queries: zorder_bucket_counts).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 Z_BITS = 16  # 2 × 16 interleaved bits → z fits in int32 range × 4
@@ -42,26 +40,3 @@ def z_value_sql(a: str, b: str, bits: int = Z_BITS) -> str:
         terms.append(f"((({a} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({b} >> {i}) & 1) << {2 * i + 1})")
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    max_records_per_file: int = 100_000,
-) -> None:
-    """Write ``df`` as parquet clustered on the Z-order of two columns:
-    range-repartition + in-partition sort by the z-value, so consecutive
-    files cover compact rectangles of (col_a, col_b) space. The z column
-    itself is dropped — it exists only to drive placement."""
-    z = z_value(F.col(col_a), F.col(col_b)).alias("_z")
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .parquet(path)
-    )

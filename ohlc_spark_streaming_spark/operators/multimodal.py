@@ -8,8 +8,8 @@ point of the layout at 100 TB (metadata-only scans stay cheap).
 The decode/feature-extract steps run as Arrow-batched ``mapInPandas``
 UDFs. Image decoding is REAL in-container: a pure-numpy parser for
 binary PPM/PGM (netpbm P6/P5) and uncompressed 24-bit BMP backs the
-default image decode, stats, and nearest-neighbor resize paths — no
-third-party imaging wheel required. ``DECODERS`` stays the extension
+default image decode and stats paths — no third-party imaging wheel
+required. ``DECODERS`` stays the extension
 point where a deployment registers richer codecs (PIL/libjpeg-class);
 registered entries take precedence over the built-ins.
 """
@@ -121,17 +121,6 @@ def decode_image(payload: bytes) -> str:
     return f"{fmt};{w}x{h};mean={mean:.6f}"
 
 
-def resize_nearest(payload: bytes, width: int, height: int) -> bytes:
-    """Nearest-neighbor resize of a PPM/PGM/BMP payload, re-encoded as
-    netpbm. Pure numpy fancy indexing — the deterministic in-container
-    resizer (a deployment registers an interpolating codec for quality)."""
-    arr, _fmt = image_array(payload)
-    h, w, _c = arr.shape
-    rows = (np.arange(height) * h) // height
-    cols = (np.arange(width) * w) // width
-    return encode_ppm(arr[rows][:, cols])
-
-
 DECODERS["image"] = decode_image
 
 
@@ -232,33 +221,6 @@ def sample_frames(
             )
 
     return assets.select("asset_id", "payload").mapInPandas(run, FRAME_SCHEMA)
-
-
-def resize_assets(assets: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize: decode → resize → re-encode per payload, Arrow-batched
-    and executor-local (no shuffle). Default codec is the pure-numpy
-    nearest-neighbor :func:`resize_nearest` over PPM/PGM/BMP; a deployment
-    registers an interpolating library codec under ``DECODERS
-    ['image/resize']`` (signature ``(payload) -> payload``, pre-bound to
-    its target size) to take precedence."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        registered = DECODERS.get("image/resize")
-        resize = registered if registered is not None else (
-            lambda p: resize_nearest(p, width, height)
-        )
-        for batch in batches:
-            out = batch.copy()
-            out["payload"] = [
-                resize(bytes(p)) for p in batch["payload"]
-            ]
-            yield out
-
-    return assets.select("asset_id", "payload").mapInPandas(
-        run, "asset_id long, payload binary"
-    ).withColumn("meta", F.create_map(
-        F.lit("resized_to"), F.lit(f"{width}x{height}")
-    ))
 
 
 SYNTH_PPM_WIDTH, SYNTH_PPM_HEIGHT = 8, 6

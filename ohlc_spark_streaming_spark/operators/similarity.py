@@ -1837,7 +1837,7 @@ def compact_ann_index(
     layout. ``repartition(file_bin)`` puts every bin in exactly one
     task, so the partitionBy write emits exactly one file per bin (the
     N-small-fragments → few-packed-files move; pinned physically in
-    tests/test_round13_ops.py). Read-equivalence is the driver-checked
+    tests/test_ann_index.py). Read-equivalence is the oracle-checked
     contract: search over the compacted index must be bitwise the
     uncompacted search."""
     plan = ann_compaction_plan(index, id_col, target_rows)

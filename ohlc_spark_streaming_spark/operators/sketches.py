@@ -92,11 +92,11 @@ def cms_estimates(
 
 # --- Bloom filter (Bloom 1970 — public algorithm) ----------------------------
 
-#: Bloom geometry: m bits, k hash rows. Declared constants — the audit
-#: query reports the resulting FP rate rather than assuming one; a
-#: production build sizes m ∝ expected build-side cardinality.
+#: Bloom geometry: m bits; k = 5 hash rows, one per (BLOOM_A, BLOOM_B)
+#: pair. Declared constants — the audit query reports the resulting FP
+#: rate rather than assuming one; a production build sizes m ∝ expected
+#: build-side cardinality.
 BLOOM_M = 16384
-BLOOM_K = 5
 #: k modular hash pairs (the MinHash family extended by one public pair).
 BLOOM_A = (*MINHASH_A[:4], 21001)
 BLOOM_B = (*MINHASH_B[:4], 6007)

@@ -217,7 +217,7 @@ def _merged_spans(docs: DataFrame) -> DataFrame:
     (doc_id, island, island_start, island_end, n_intervals). Single
     source of truth for q_dedup_span_extents, _span_kept
     (dedup_span_cut), and corpus_curation_report; the agreement test in
-    tests/test_round7_ops.py rides on all three sharing this."""
+    tests/test_suffix.py rides on all three sharing this."""
     from ..operators.sessions import interval_union
 
     toks = F.split(F.col("text"), " ")
@@ -4881,7 +4881,7 @@ def q_boilerplate_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     — order/partition-independent by algebra, O(1) aggregate state, so
     the witness survives any executor layout at 100 TB (a sorted-list
     md5 would buffer every doc id per source). The planted-phrase test
-    (tests/test_round11_ops.py) recomputes the checksums from expected
+    (tests/test_corpus_hygiene.py) recomputes the checksums from expected
     kept text byte-for-byte.
 
     Scale: grams derive in-row, ONE map-side-combined catalog

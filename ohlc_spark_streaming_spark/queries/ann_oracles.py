@@ -118,8 +118,8 @@ _QMEAN = (
     "CAST(SUM(CAST(floor(u.v * 1e12 + CAST(0.5 AS DOUBLE)) "
     "AS DECIMAL(38,0))) AS DOUBLE) / 1e12 / count(*)"
 )
-#: Residual: elementwise e − centroid (IEEE subtraction, matches
-#: vectorops.vdiff bitwise).
+#: Residual: elementwise e − centroid (IEEE subtraction, matches the
+#: ``zip_with(x - y)`` residual in operators/similarity.py bitwise).
 _VDIFF = "list_transform(list_zip({a}, {b}), x -> x[1] - x[2])"
 
 

@@ -112,10 +112,6 @@ def q_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _TOKENS = "string_split(text, ' ')"
-_SHINGLES = (
-    f"list_distinct(list_transform(range(1, greatest(len({_TOKENS}) - 2, 1) + 1),"
-    f" i -> array_to_string(({_TOKENS})[i:i+2], ' ')))"
-)
 
 
 # Shared shingle/MinHash oracle builders live in _oracles.py (no registry

@@ -1603,9 +1603,9 @@ GROUP BY 1
 @register("zorder_bucket_counts", _zorder_oracle())
 def q_zorder_bucket_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) values over (partkey, suppkey), bucketed — the
-    clustering key behind multi-column file skipping (operators/layout.py;
-    write path tested for locality in tests/test_layout.py). The bit
-    interleave is exact integer arithmetic, replayed by the oracle."""
+    clustering key behind multi-column file skipping (operators/layout.py).
+    The bit interleave is exact integer arithmetic, replayed by the
+    oracle."""
     from ..operators.layout import z_value
 
     l = load_table(spark, sf_dir, "lineitem")

@@ -34,6 +34,13 @@ _counter = itertools.count()
 _SESSION_WM_DELAY_S = 120
 
 
+def _python_state_partitions() -> int:
+    """State partitions for a Python-state drain (applyInPandasWithState,
+    transformWithStateInPandas): sized for Arrow-worker parallelism, never
+    below 8."""
+    return max(8, default_parallelism() // 2)
+
+
 @register("streaming_ohlc_candles", _OHLC_ORACLE)
 def q_streaming_ohlc_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of the flagship: events replayed as a file stream,
@@ -337,10 +344,9 @@ def q_streaming_stateful_error_counts(spark: SparkSession, sf_dir: str) -> DataF
 
     stream = table_stream(spark, sf_dir, "events")
     emissions = stateful_event_counts(stream)
-    # Python-stateful: size partitions for Arrow-worker parallelism.
     log = run_to_memory(
         emissions, output_mode="update",
-        partitions=max(8, default_parallelism() // 2),
+        partitions=_python_state_partitions(),
     )
     return final_counts(log)
 
@@ -579,7 +585,7 @@ def q_streaming_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFram
     gaps = stateful_interarrival_gaps(stream)
     log = run_to_memory(
         gaps, output_mode="append",
-        partitions=max(8, default_parallelism() // 2),
+        partitions=_python_state_partitions(),
     )
     return interarrival_rollup(log)
 
@@ -830,7 +836,7 @@ def q_streaming_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     emissions = stateful_transitions(stream)
     log = run_to_memory(
         emissions, output_mode="append",
-        partitions=max(8, default_parallelism() // 2),
+        partitions=_python_state_partitions(),
     )
     return log.groupBy("from_type", "to_type").agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -870,7 +876,7 @@ def _run_tws(
     per micro-batch, so MANY-small-group operators (the LSH band buckets:
     ~20k groups of a few entries) are fastest well below the core count —
     measured at sf0.1: 8 parts 14.4s, 16 parts 19.5s, 32 parts 19.4s,
-    4 parts 32.8s. Defaults to the established max(8, cores/2)."""
+    4 parts 32.8s. Defaults to :func:`_python_state_partitions`."""
     from .._compat import ensure_protobuf_for_session
 
     if not ensure_protobuf_for_session(spark):
@@ -881,7 +887,7 @@ def _run_tws(
     with scoped_confs(spark, _ROCKSDB_CONFS):
         return run_to_memory(
             build_emissions(), output_mode=output_mode,
-            partitions=partitions or max(8, default_parallelism() // 2),
+            partitions=partitions or _python_state_partitions(),
         )
 
 
@@ -1788,7 +1794,7 @@ def q_streaming_decontaminate_incr(spark: SparkSession, sf_dir: str) -> DataFram
     broadcast gate (fold_decontaminate, shared verbatim). Gate
     decisions equal the batch recompute because the registry exhibit
     drains the eval tape before opening the train gate; the two-phase
-    tape test (tests/test_round11_ops.py) proves the stronger
+    tape test (tests/test_streaming_stateful.py) proves the stronger
     property — after an EVAL-SIDE APPEND the incrementally updated
     state gates identically to a from-scratch batch rebuild over the
     grown eval corpus. Output adds ``n_eval_grams`` (the state table's

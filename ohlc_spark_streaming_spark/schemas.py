@@ -3,9 +3,10 @@
 The reference declares exactly one schema — the 14-field all-strings trade
 message (``/root/reference/main.py:48-67``; numerics arrive as JSON strings
 and are cast after parsing, ``main.py:119-126``). We keep that schema
-verbatim-in-spirit plus the candle output contract
-(``main.py:176-187``) and the driver testdata tables
-(``/root/repo/FIXTURES.md`` §C).
+verbatim-in-spirit plus the names of the testdata tables
+(``FIXTURES.md`` §C). The typed-trade and candle column
+contracts live with their operators (operators/trades.py,
+operators/ohlc.py ``OHLC_COLUMNS``).
 
 Schemas are explicit everywhere — no inference on the hot path. At 100 TB,
 schema inference means an extra pass over data; a declared schema is free.
@@ -38,42 +39,6 @@ TRADE_WIRE_SCHEMA = T.StructType(
     ]
 )
 
-#: Typed trade after cast + null-guard (reference: main.py:119-127).
-TRADE_SCHEMA = T.StructType(
-    [
-        T.StructField("topic", T.StringType()),
-        T.StructField("from_symbol", T.StringType()),
-        T.StructField("to_symbol", T.StringType()),
-        T.StructField("timestamp", T.TimestampType()),
-        T.StructField("price", T.DoubleType()),
-        T.StructField("quantity", T.DoubleType()),
-    ]
-)
-
-#: Candle output record (reference: main.py:176-187; FIXTURES.md §B).
-CANDLE_SCHEMA = T.StructType(
-    [
-        T.StructField("base", T.StringType()),
-        T.StructField("start_ts", T.TimestampType()),
-        T.StructField("end_ts", T.TimestampType()),
-        T.StructField("open", T.DoubleType()),
-        T.StructField("high", T.DoubleType()),
-        T.StructField("low", T.DoubleType()),
-        T.StructField("close", T.DoubleType()),
-        T.StructField("volume", T.DoubleType()),
-    ]
-)
-
-#: Kafka sink row contract (reference: main.py:173-188,209): per-row topic
-#: routing — the sink reads the `topic` column of each row.
-KAFKA_SINK_SCHEMA = T.StructType(
-    [
-        T.StructField("topic", T.StringType()),
-        T.StructField("key", T.StringType()),
-        T.StructField("value", T.StringType()),
-    ]
-)
-
 # --- Driver testdata tables (FIXTURES.md §C) --------------------------------
 
 #: Names of the testdata tables under /root/testdata/sf*/.
@@ -88,30 +53,4 @@ TABLE_NAMES = (
     "events",
     "documents",
     "embeddings",
-)
-
-#: events table *after* engine normalization (parquet stores ts as
-#: TIMESTAMP(NANOS); we surface TIMESTAMP_NTZ at microsecond precision,
-#: matching what DuckDB sees).
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampNTZType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-#: Multimodal column convention (SURVEY.md §2.11): opaque binary payload +
-#: typed metadata. The decode step is stubbed (no image/audio libs in this
-#: container) but the schema and partitioning contracts are real.
-MULTIMODAL_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("modality", T.StringType()),  # image | audio | video | text
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-    ]
 )

@@ -20,8 +20,6 @@ from pyspark.sql import functions as F
 
 from ..session import apply_engine_confs
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -104,15 +102,3 @@ def _file_bytes(path: str) -> int:
         return os.path.getsize(path)
     except OSError:
         return 0
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=None) -> dict[str, DataFrame]:
-    from ..schemas import TABLE_NAMES
-
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=None) -> None:
-    """Register testdata tables as temp views for the SQL entry path."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)

@@ -1,16 +1,17 @@
-"""Custom connector via the Spark 4 Python DataSource API (SURVEY §2.1
-breadth beyond the reference's Kafka/parquet surface).
+"""Custom read connector via the Spark 4 Python DataSource API (SURVEY
+§2.1 breadth beyond the reference's Kafka/parquet surface).
 
-``SyntheticTickSource`` is a pure-Python batch connector that generates a
-deterministic tick tape: each partition emits a contiguous ``tick_id``
-range, and every column is a CLOSED-FORM function of ``tick_id`` —
-no per-partition sequential state — so
+``SyntheticTickSource`` is a pure-Python source, batch and streaming, that
+generates a deterministic tick tape: each partition emits a contiguous
+``tick_id`` range, and every column is a CLOSED-FORM function of
+``tick_id`` — no per-partition sequential state — so
 
 * the read is embarrassingly parallel (one task per declared partition,
   no coordination, the shape a 100 TB connector needs), and
 * a DuckDB oracle can replay the exact same rows from ``range()``
-  (queries/llm.py:pyds_tick_summary) — the connector itself is under the
-  value-hash gate like every operator.
+  (queries/llm.py:pyds_tick_summary and the streaming twin
+  queries/streaming.py:pyds_stream_tick_summary) — the connector itself
+  is under the value-hash gate like every operator.
 
 The multiplier is Knuth's 2654435761 (golden-ratio hash); the modulus
 2147483647 = 2³¹−1 keeps everything in exact int64 on both engines.
@@ -21,10 +22,8 @@ from __future__ import annotations
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
 
 MULT = 2654435761
@@ -116,132 +115,3 @@ SELECT i AS tick_id,
        ((i * {MULT}) % {MOD} % {PRICE_CENTS_MOD}) / 100.0 AS price
 FROM (SELECT unnest(range(0, {n_total})) AS i)
 """
-
-
-# --- Python DataSource WRITER: JSONL directory sink --------------------------
-
-
-class _JsonlCommit(WriterCommitMessage):
-    """Per-task commit message: (file name, row count)."""
-
-    def __init__(self, filename: str, n_rows: int):
-        self.filename = filename
-        self.n_rows = n_rows
-
-
-def _json_default(v):
-    """JSON encoder fallback for the non-primitive Spark types a row can
-    carry (ADVICE r6: ``json.dumps`` alone rejects datetime/Decimal/bytes,
-    limiting the sink to primitive schemas). Deterministic text forms:
-    ISO timestamps, exact decimal strings, base64 bytes."""
-    import base64
-    import datetime
-    import decimal
-
-    if isinstance(v, (datetime.datetime, datetime.date, datetime.time)):
-        return v.isoformat()
-    if isinstance(v, decimal.Decimal):
-        return str(v)
-    if isinstance(v, (bytes, bytearray)):
-        return base64.b64encode(bytes(v)).decode("ascii")
-    raise TypeError(f"jsonl_dir cannot serialize {type(v).__name__}")
-
-
-class _JsonlDirWriter(DataSourceWriter):
-    """One JSONL file per partition, object-store-safe commit protocol:
-
-    * each task writes a UNIQUELY named file (uuid — task retries and
-      speculative attempts can never collide or corrupt a committed
-      file),
-    * ``commit`` (driver, exactly once, after every task succeeded)
-      writes the ``_MANIFEST.json`` naming the files that BELONG to the
-      dataset — readers that honor the manifest see all-or-nothing.
-      ``mode("append")`` MERGES the prior manifest's file list;
-      ``mode("overwrite")`` replaces it and clears superseded part
-      files (manifest is written first, so a crash mid-cleanup leaves
-      stale-but-unreferenced files, never a manifest naming deleted
-      ones),
-    * ``abort`` best-effort removes the orphan attempt files.
-
-    This is the same two-phase shape as Spark's file-sink transaction
-    log, expressed through the Python DataSource writer API."""
-
-    def __init__(self, options, overwrite: bool):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("jsonl_dir requires a path option")
-        self.overwrite = overwrite
-
-    def write(self, iterator):
-        import json
-        import os
-        import uuid
-
-        os.makedirs(self.path, exist_ok=True)
-        fname = f"part-{uuid.uuid4().hex}.jsonl"
-        n = 0
-        with open(os.path.join(self.path, fname), "w") as f:
-            for row in iterator:
-                f.write(json.dumps(row.asDict(), default=_json_default) + "\n")
-                n += 1
-        return _JsonlCommit(fname, n)
-
-    def commit(self, messages):
-        import json
-        import os
-
-        new_files = sorted(
-            (
-                {"name": m.filename, "n_rows": m.n_rows}
-                for m in messages
-                if m is not None
-            ),
-            key=lambda d: d["name"],
-        )
-        prior_files: list[dict] = []
-        manifest_path = os.path.join(self.path, "_MANIFEST.json")
-        if not self.overwrite and os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                prior_files = json.load(f).get("files", [])
-        files = [*prior_files, *new_files]
-        manifest = {
-            "files": files,
-            "n_rows": sum(e["n_rows"] for e in files),
-        }
-        with open(manifest_path, "w") as f:
-            json.dump(manifest, f)
-        if self.overwrite:
-            keep = {e["name"] for e in new_files}
-            for fname in os.listdir(self.path):
-                if fname.endswith(".jsonl") and fname not in keep:
-                    try:
-                        os.remove(os.path.join(self.path, fname))
-                    except OSError:
-                        pass
-
-    def abort(self, messages):
-        import os
-
-        for m in messages:
-            if m is None:
-                continue
-            try:
-                os.remove(os.path.join(self.path, m.filename))
-            except OSError:
-                pass
-
-
-class JsonlDirSink(DataSource):
-    """``df.write.format("jsonl_dir").option("path", d).save()`` — the
-    write-side twin of SyntheticTickSource's read connector."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "jsonl_dir"
-
-    def writer(self, schema, overwrite: bool):
-        return _JsonlDirWriter(self.options, overwrite)
-
-
-def register_jsonl_sink(spark) -> None:
-    spark.dataSource.register(JsonlDirSink)

@@ -2,17 +2,10 @@
 which has no ``dropDuplicates`` at all; this is also the streaming face of
 the LLM exact-dedup operator, operators/dedup.py).
 
-Two variants with different state/correctness trade-offs:
-
-* :func:`distinct_keys` — ``dropDuplicates(keys)``: exact global dedup.
-  State holds every key ever seen (no eviction) — correct at any replay
-  distance but state grows with key cardinality. Use when the key space is
-  bounded (e.g. (user, event_type) pairs), or for bounded replays.
-* :func:`dedup_within_watermark` — ``dropDuplicatesWithinWatermark(keys)``:
-  drops duplicates arriving within the watermark delay of the first
-  sighting, then evicts the key. State is bounded by the watermark — the
-  100 TB-stream form — but a duplicate farther apart than the delay is
-  re-emitted. Exactly-once per key becomes exactly-once per (key, epoch).
+:func:`distinct_keys` is ``dropDuplicates(keys)``: exact global dedup.
+State holds every key ever seen (no eviction) — correct at any replay
+distance but state grows with key cardinality. Use it when the key space
+is bounded (e.g. (user, event_type) pairs), or for bounded replays.
 """
 
 from __future__ import annotations
@@ -25,16 +18,3 @@ from pyspark.sql import DataFrame
 def distinct_keys(stream: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Exact streaming dedup: first row per key, unbounded key state."""
     return stream.select(*keys).dropDuplicates(list(keys))
-
-
-def dedup_within_watermark(
-    stream: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    delay: str = "2 minutes",
-) -> DataFrame:
-    """Watermark-bounded dedup: duplicates within ``delay`` of the first
-    sighting are dropped; key state is evicted once the watermark passes."""
-    return stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(
-        list(keys)
-    )

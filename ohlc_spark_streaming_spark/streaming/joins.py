@@ -39,24 +39,6 @@ def interval_join(
     return _interval_join(left, right, key, left_ts, right_ts, lookback, watermark, "inner")
 
 
-def interval_join_left_outer(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    lookback: str = "2 hours",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """LEFT OUTER stream-stream interval join: like :func:`interval_join`
-    but unmatched left rows ARE emitted (right columns null) — once the
-    watermark proves no in-band right row can still arrive. The emission
-    of null-matches is therefore watermark-delayed in streaming; replayed
-    bounded input with availableNow still yields the complete answer,
-    which is what the batch-parity test checks."""
-    return _interval_join(left, right, key, left_ts, right_ts, lookback, watermark, "leftOuter")
-
-
 def _interval_join(
     left: DataFrame,
     right: DataFrame,
@@ -67,6 +49,9 @@ def _interval_join(
     watermark: str,
     how: str,
 ) -> DataFrame:
+    """The band join every variant shares: watermark streaming sides,
+    then join ``how`` on ``key`` with ``right_ts`` in
+    ``[left_ts - lookback, left_ts]``."""
     if left.isStreaming:
         left = left.withWatermark(left_ts, watermark)
     if right.isStreaming:
@@ -81,7 +66,13 @@ def _interval_join(
         )
     )
     joined = left.alias("l").join(right.alias("r"), cond, how)
-    return joined.drop(rk)
+    if how != "fullOuter":
+        return joined.drop(rk)
+    # Right-unmatched rows have a NULL left key, so the full-outer key is
+    # coalesce(l.key, r.key) rather than the left key alone.
+    lcols = [F.col(f"l.{c}") for c in left.columns if c != key]
+    rcols = [F.col(f"r.{c}") for c in right.columns if c != key]
+    return joined.select(F.coalesce(lk, rk).alias(key), *lcols, *rcols)
 
 
 def interval_join_full_outer(
@@ -104,28 +95,13 @@ def interval_join_full_outer(
     ``left_ts ∈ [right_ts, right_ts + lookback]``), so state on both
     sides stays ``O(rate × (lookback + watermark))``.
 
-    Unlike :func:`_interval_join` this cannot drop the right key:
-    right-unmatched rows have a NULL left key, so the output ``key``
-    is ``coalesce(l.key, r.key)``. Bounded replays needing the
-    COMPLETE answer must close the tape with watermark-advancing
-    sentinels on both sides (see q_streaming_full_outer_join)."""
-    if left.isStreaming:
-        left = left.withWatermark(left_ts, watermark)
-    if right.isStreaming:
-        right = right.withWatermark(right_ts, watermark)
-    lk, rk = F.col(f"l.{key}"), F.col(f"r.{key}")
-    cond = (
-        (lk == rk)
-        & (F.col(f"r.{right_ts}") <= F.col(f"l.{left_ts}"))
-        & (
-            F.col(f"r.{right_ts}")
-            >= F.col(f"l.{left_ts}") - F.expr(f"INTERVAL {lookback}")
-        )
+    The output ``key`` is ``coalesce(l.key, r.key)``: right-unmatched
+    rows have a NULL left key. Bounded replays needing the COMPLETE
+    answer must close the tape with watermark-advancing sentinels on
+    both sides (see q_streaming_full_outer_join)."""
+    return _interval_join(
+        left, right, key, left_ts, right_ts, lookback, watermark, "fullOuter"
     )
-    joined = left.alias("l").join(right.alias("r"), cond, "fullOuter")
-    lcols = [F.col(f"l.{c}") for c in left.columns if c != key]
-    rcols = [F.col(f"r.{c}") for c in right.columns if c != key]
-    return joined.select(F.coalesce(lk, rk).alias(key), *lcols, *rcols)
 
 
 def interval_join_left_semi(
@@ -142,8 +118,8 @@ def interval_join_left_semi(
     streaming existence filter ("purchases preceded by a view") that an
     inner join would fan out per match and a downstream distinct would pay
     an extra stateful aggregation for. Same banded state-eviction story as
-    :func:`interval_join`; completes the family (inner / left-outer /
-    semi)."""
+    :func:`interval_join`; with the anti and full-outer variants it
+    completes the family (inner / semi / anti / full outer)."""
     return _interval_join(
         left, right, key, left_ts, right_ts, lookback, watermark, "left_semi"
     )

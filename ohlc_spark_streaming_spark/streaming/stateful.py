@@ -481,7 +481,7 @@ def tws_session_timers(stream: DataFrame) -> DataFrame:
       key's single timer at that expiry (deleting the previous one), and
       ``handleExpiredTimer`` emits the open session and clears state.
 
-    Empirical contract (pinned by tests/test_streaming_round9.py): under
+    Empirical contract (pinned by tests/test_streaming_stateful.py): under
     ``trigger(availableNow=True)`` Spark runs a drain micro-batch after
     the last file, firing every timer ≤ the final watermark — so a
     bounded replay whose tape ends with a watermark-advancing sentinel

@@ -1,6 +1,7 @@
 """BPE trainer pins (VERDICT r12 item 5): the codegen fold's greedy
 merge application against a pure-Python reference on adversarial
-inputs, merge-order determinism, and merges building on merges."""
+inputs, merge-order determinism, merges building on merges, and the
+streaming encoder's multi-batch equality with the batch encode."""
 
 from __future__ import annotations
 
@@ -98,3 +99,50 @@ def test_bpe_encode_reconstructs_and_compresses(spark):
         assert "".join(r.syms) == r.word
         assert len(r.syms) <= len(r.word) or r.word == ""
     assert any(len(r.syms) < len(r.word) for r in enc)
+
+
+def test_streaming_bpe_encode_multibatch_equals_batch(spark, tmp_path):
+    """The frozen-tokenizer pin: the documents table split into THREE
+    real micro-batches, encoded per batch by fold_bpe_encode with the
+    batch-trained merge table, merges to row-for-row the batch
+    bpe_encode_vocab answer — a frozen tokenizer is arrival-batching
+    invariant because segmentation is a pure function of (word, rules)
+    and the only cross-batch state is the word-frequency ledger."""
+    import os
+
+    from ohlc_spark_streaming_spark.operators.bpe import (
+        bpe_encode,
+        bpe_train_rules,
+        word_freqs,
+    )
+    from ohlc_spark_streaming_spark.queries.bpe_oracles import _BPE_MERGES
+    from ohlc_spark_streaming_spark.queries.streaming import fold_bpe_encode
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    rules = bpe_train_rules(docs, _BPE_MERGES)
+    tape_dir = str(tmp_path / "doctape")
+    docs.withColumn("part", F.col("doc_id") % 3).repartitionByRange(
+        3, "part"
+    ).drop("part").write.mode("overwrite").parquet(tape_dir)
+    n_files = len([f for f in os.listdir(tape_dir) if f.endswith(".parquet")])
+    assert n_files == 3, n_files
+    stream = (
+        spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(tape_dir)
+    )
+    got = set(map(tuple, fold_bpe_encode(stream, rules).collect()))
+    want = set(
+        map(
+            tuple,
+            bpe_encode(word_freqs(docs), rules)
+            .select(
+                "word",
+                F.col("freq").cast("long").alias("freq"),
+                F.size("syms").cast("long").alias("n_tokens"),
+                F.concat_ws("|", "syms").alias("tokens"),
+            )
+            .collect(),
+        )
+    )
+    assert got == want and len(got) > 0

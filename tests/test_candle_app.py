@@ -39,7 +39,7 @@ from ohlc_spark_streaming_spark.streaming.checkpoints import (
 from .conftest import SF_SMOKE
 
 WIRE_SCHEMA = "topic string, value string"
-CANDLE_SCHEMA = (
+CANDLE_JSON_SCHEMA = (
     "base string, start_ts timestamp_ntz, end_ts timestamp_ntz, open double,"
     " high double, low double, close double, volume double"
 )
@@ -208,7 +208,7 @@ def test_candle_app_restart_keeps_checkpointed_stores(monkeypatch, tmp_path, spa
     def collect(batch_df, batch_id):
         # The batch's session is the one the query cloned at start().
         managers.append(batch_df.sparkSession.conf.get(MANAGER_CONF, None))
-        parsed = batch_df.select(F.from_json("value", CANDLE_SCHEMA).alias("c"))
+        parsed = batch_df.select(F.from_json("value", CANDLE_JSON_SCHEMA).alias("c"))
         emitted.extend(tuple(r) for r in parsed.select("c.*").collect())
 
     def run(cores: int):
@@ -310,7 +310,7 @@ def test_candle_app_survives_sigkill(tmp_path, spark):
 
     emitted = (
         spark.read.text(glob.glob(os.path.join(sink, "batch-*.json")))
-        .select(F.from_json("value", CANDLE_SCHEMA).alias("c"))
+        .select(F.from_json("value", CANDLE_JSON_SCHEMA).alias("c"))
         .select("c.*")
         .collect()
     )

@@ -158,3 +158,23 @@ def test_compose_file_is_structurally_valid():
     for p in svc.get("ports", []):
         host, container = str(p).split(":")
         assert host.isdigit() and container.isdigit(), p
+
+
+def test_compose_yaml_parses():
+    """docker/compose.yml must stay valid YAML with the expected top-level
+    structure even on hosts without the compose plugin (the README's
+    live-Kafka path depends on it booting unchanged elsewhere)."""
+    import os
+    import re
+
+    import pytest
+
+    yaml = pytest.importorskip("yaml")
+    path = os.path.join(os.path.dirname(__file__), "..", "docker", "compose.yml")
+    with open(path) as f:
+        txt = f.read()
+    doc = yaml.safe_load(re.sub(r"\$\{[A-Z_]+\}", "x", txt))
+    assert set(doc) == {"services", "volumes", "networks"}
+    svc = doc["services"]["spark-submit"]
+    assert svc["restart"] == "unless-stopped"
+    assert any("KAFKA_BOOTSTRAP_SERVERS" in e for e in svc["environment"])

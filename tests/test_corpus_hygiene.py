@@ -8,8 +8,13 @@ oracle can't see.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import functions as F
 
+from ohlc_spark_streaming_spark.functions.hashing import P
 from ohlc_spark_streaming_spark.queries.llm import DOMAIN_TARGET_BPS
 from ohlc_spark_streaming_spark.registry import QUERIES
 
@@ -80,3 +85,82 @@ def test_domain_mixture_sample_is_content_stable(spark):
     a = sorted(map(tuple, QUERIES["domain_mixture"](spark, SF_SMOKE).collect()))
     b = sorted(map(tuple, QUERIES["domain_mixture"](spark, SF_SMOKE).collect()))
     assert a == b
+
+
+def _rh(s: str) -> int:
+    """Python twin of functions.hashing.rolling_hash."""
+    acc = 0
+    for ch in s:
+        acc = (acc * 31 + ord(ch)) % P
+    return acc
+
+
+def test_boilerplate_cut_planted(spark):
+    """boilerplate_cut semantics by construction: a 12-token phrase
+    repeated across three docs enters the catalog and EVERY occurrence
+    is cut (including two occurrences inside one doc); a 12-token
+    phrase occurring once and an 11-token repeated run (too short to
+    form a repeated 12-gram) both survive; and the per-source scrub
+    checksums equal the sum/xor of the rolling hash of the expected
+    ``doc_id:kept_text`` — byte-for-byte, recomputed in Python."""
+    from ohlc_spark_streaming_spark.queries.analytics import (
+        _BOILER_K,
+        q_boilerplate_cut,
+    )
+
+    assert _BOILER_K == 12
+    boiler = [f"b{i}" for i in range(12)]    # the repeated phrase
+    once = [f"o{i}" for i in range(12)]      # occurs once -> survives
+    short = [f"s{i}" for i in range(11)]     # 11 tokens -> survives
+    texts = {
+        # srcA: boilerplate twice in doc 0 (non-adjacent), once in doc 1
+        0: ("srcA", ["x0", "x1"] + boiler + ["x2"] + boiler + ["x3"]),
+        1: ("srcA", boiler + ["y0"] + once),
+        # srcB: one more occurrence (3 docs total), plus the survivors
+        2: ("srcB", ["z0"] + boiler),
+        3: ("srcB", ["z1"] + short + ["z2"] + short),
+        4: ("srcB", [f"u{i}" for i in range(14)]),
+    }
+    kept_expected = {
+        0: ["x0", "x1", "x2", "x3"],
+        1: ["y0"] + once,
+        2: ["z0"],
+        3: texts[3][1],
+        4: texts[4][1],
+    }
+    tape = tempfile.mkdtemp(prefix="bcut_docs_")
+    try:
+        spark.createDataFrame(
+            [(k, src, " ".join(v)) for k, (src, v) in texts.items()],
+            "doc_id long, source string, text string",
+        ).write.mode("overwrite").parquet(
+            os.path.join(tape, "documents.parquet")
+        )
+        got = {r.source: r for r in q_boilerplate_cut(spark, tape).collect()}
+    finally:
+        shutil.rmtree(tape, ignore_errors=True)
+
+    want = {}
+    for d, (src, toks) in texts.items():
+        w = want.setdefault(
+            src,
+            {"n": 0, "touched": 0, "before": 0, "after": 0, "sum": 0, "xor": 0},
+        )
+        kept = kept_expected[d]
+        h = _rh(f"{d}:{' '.join(kept)}")
+        w["n"] += 1
+        w["touched"] += int(len(kept) != len(toks))
+        w["before"] += len(toks)
+        w["after"] += len(kept)
+        w["sum"] += h
+        w["xor"] ^= h
+    assert set(got) == set(want)
+    for src, w in want.items():
+        r = got[src]
+        assert r.n_docs == w["n"], (src, r)
+        assert r.docs_touched == w["touched"], (src, r)
+        assert r.tokens_before == w["before"], (src, r)
+        assert r.tokens_after == w["after"], (src, r)
+        assert r.tokens_cut == w["before"] - w["after"], (src, r)
+        assert r.scrub_sum == w["sum"], (src, r)
+        assert r.scrub_xor == w["xor"], (src, r)

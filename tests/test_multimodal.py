@@ -116,38 +116,6 @@ def test_unknown_payload_raises_value_error():
         multimodal.image_array(b"GIF89a....")
 
 
-def test_resize_nearest_exact_expectation():
-    """2x upscale by nearest neighbor: every source pixel becomes a 2x2
-    block; downscale back returns the original."""
-    rng = np.random.default_rng(11)
-    arr = rng.integers(0, 256, size=(2, 2, 3), dtype=np.uint8)
-    up = multimodal.resize_nearest(_ppm_bytes(arr), 4, 4)
-    up_arr, _ = multimodal.image_array(up)
-    assert (up_arr == np.kron(arr, np.ones((2, 2, 1), dtype=np.uint8))).all()
-    down, _ = multimodal.image_array(multimodal.resize_nearest(up, 2, 2))
-    assert (down == arr).all()
-
-
-def test_resize_assets_defaults_to_numpy_codec(spark):
-    """No registration needed: the Spark resize path decodes real PPM
-    payloads and re-encodes at the target size in-container."""
-    ids = spark.range(4).withColumnRenamed("id", "doc_id")
-    assets = multimodal.synth_ppm_assets(ids)
-    out = multimodal.resize_assets(assets, 4, 2).collect()
-    assert len(out) == 4
-    for r in out:
-        arr, fmt = multimodal.image_array(bytes(r.payload))
-        assert fmt == "ppm" and arr.shape == (2, 4, 3)
-        assert r.meta["resized_to"] == "4x2"
-    # A registered resizer still takes precedence over the built-in.
-    multimodal.DECODERS["image/resize"] = lambda p: p[:16]
-    try:
-        rows = multimodal.resize_assets(assets, 4, 2).collect()
-        assert all(len(bytes(r.payload)) <= 16 for r in rows)
-    finally:
-        del multimodal.DECODERS["image/resize"]
-
-
 def test_synth_and_stats_end_to_end(spark):
     """The registered multimodal_image_decode pipeline: synthesized PPM
     bytes decode to the closed-form statistics."""

@@ -71,24 +71,6 @@ def test_asof_nearest_still_single_shuffle(spark):
     assert plan.count("Window") >= 2  # two directional passes present
 
 
-def test_join_hints_override_planner(spark):
-    """Strategy hints must override size-based planning: a merge hint on a
-    broadcast-sized dim forces SortMergeJoin; a shuffle_hash hint forces
-    ShuffledHashJoin."""
-    from ohlc_spark_streaming_spark.operators.joins import hinted_join
-
-    o = load_table(spark, SF_SMOKE, "orders")
-    c = load_table(spark, SF_SMOKE, "customer")
-    on = o.o_custkey == c.c_custkey
-
-    merged = hinted_join(o, c, on, strategy="merge")
-    assert "SortMergeJoin" in _plan(merged)
-    hashed = hinted_join(o, c, on, strategy="shuffle_hash")
-    assert "ShuffledHashJoin" in _plan(hashed)
-    bcast = hinted_join(o, c, on, strategy="broadcast")
-    assert "BroadcastHashJoin" in _plan(bcast)
-
-
 def test_q6_filters_reach_the_scan(spark):
     """TPC-H Q6 is a pure filter+agg — every predicate must be pushed to
     the parquet scan (PushedFilters), and the scan must prune to the four

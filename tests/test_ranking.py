@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ohlc_spark_streaming_spark.operators.joins import salted_join
 from ohlc_spark_streaming_spark.operators.ranking import (
     ntile_expr,
     with_global_rank,
@@ -49,14 +48,6 @@ def test_ntile_expr_matches_window_ntile(spark, n_rows, n_buckets):
     want = df.select("v", "id", F.ntile(n_buckets).over(w).alias("b"))
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
-
-
-def test_salted_join_rejects_right_and_full(spark):
-    a = load_table(spark, SF_SMOKE, "nation")
-    b = load_table(spark, SF_SMOKE, "region")
-    for how in ("right", "full", "outer"):
-        with pytest.raises(ValueError, match="salted_join supports"):
-            salted_join(a, b, "n_regionkey", "n_nationkey", how=how)
 
 
 def test_with_group_rank_matches_window(spark):

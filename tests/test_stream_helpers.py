@@ -1,6 +1,6 @@
 """Stream scaffolding helpers: replay_tape, one_row_frame,
 ephemeral_checkpoint, fold_stream, session.scoped_confs, and the
-CKPT_RAW / CONF_RAW source lint.
+CKPT_RAW / CONF_RAW / DEAD_DEF source lints.
 
 These pin the CONTRACTS each helper owns in one place — tape replay
 invariants (mtime order, cleanup), checkpoint-dir cleanup, fold_stream's
@@ -166,3 +166,28 @@ def test_ckpt_raw_lint_flags_violations(tmp_path):
         finally:
             rogue.unlink()
     assert tools_lint.lint_checkpoint_hygiene() == []
+
+
+def test_dead_def_lint_flags_uncalled_definitions():
+    """The DEAD_DEF source lint passes the current tree (every package
+    definition has a caller outside tests, or an allowlisted reason) and
+    flags a planted module holding a def that nothing calls."""
+    import pathlib
+    import sys
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    sys.path.insert(0, str(repo))
+    import tools_lint
+
+    assert tools_lint.lint_dead_defs() == []
+    rogue = repo / "ohlc_spark_streaming_spark" / "_dead_def_probe.py"
+    rogue.write_text("def uncalled_probe():\n    return uncalled_probe\n")
+    try:
+        findings = tools_lint.lint_dead_defs()
+        assert [(rel, code) for rel, code, _ in findings] == [
+            ("_dead_def_probe.py", "DEAD_DEF")
+        ]
+        assert "uncalled_probe" in findings[0][2]
+    finally:
+        rogue.unlink()
+    assert tools_lint.lint_dead_defs() == []

@@ -65,28 +65,6 @@ def test_streaming_update_mode_refines_to_batch(spark):
     assert set(map(tuple, batch.collect())) <= emitted
 
 
-def test_dedup_within_watermark_bounds(spark):
-    """dropDuplicatesWithinWatermark: every distinct key appears; only
-    duplicates within the delay are guaranteed dropped, so the count lies
-    between n_distinct and n_rows (SURVEY §2.9)."""
-    from ohlc_spark_streaming_spark.sources.batch import load_table as lt
-    from ohlc_spark_streaming_spark.streaming.dedup import dedup_within_watermark
-
-    stream = table_stream(spark, SF_SMOKE, "events")
-    out = run_to_memory(
-        dedup_within_watermark(
-            stream, ["user_id", "event_type"], ts_col="ts", delay="2 minutes"
-        ).select("user_id", "event_type"),
-        output_mode="append",
-    )
-    batch = lt(spark, SF_SMOKE, "events")
-    n_rows = batch.count()
-    exact = {tuple(r) for r in batch.select("user_id", "event_type").distinct().collect()}
-    emitted = [tuple(r) for r in out.collect()]
-    assert set(emitted) == exact
-    assert len(exact) <= len(emitted) <= n_rows
-
-
 def test_stateful_counts_carry_across_batches(tmp_path, spark):
     """applyInPandasWithState must carry state across micro-batches: split
     the events into 4 files (one per micro-batch via maxFilesPerTrigger=1)
@@ -131,8 +109,6 @@ def test_checkpoint_recovery_no_reprocessing(tmp_path, spark):
     """ST8 exactly-once: restart a checkpointed file-sink query after new
     input arrives — only the NEW file is processed (offsets journaled in
     the checkpoint; the file sink's commit log dedupes output)."""
-    from ohlc_spark_streaming_spark.sinks.files import parquet_stream_writer
-
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -147,9 +123,12 @@ def test_checkpoint_recovery_no_reprocessing(tmp_path, spark):
             .parquet(src)
         )
         q = (
-            parquet_stream_writer(
-                stream.select("event_id"), out, ckpt, query_name="ckpt_recovery"
-            )
+            stream.select("event_id")
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .queryName("ckpt_recovery")
+            .outputMode("append")
             .trigger(availableNow=True)
             .start()
         )
@@ -233,55 +212,6 @@ def test_streaming_minute_candles_roll_up_to_batch_hourly(spark):
     assert sorted(map(tuple, hourly.collect())) == sorted(
         map(tuple, batch.collect())
     )
-
-
-def test_streaming_left_outer_interval_join(spark):
-    """Left-outer stream-stream interval join: matched rows equal the
-    batch inner join exactly; null-matches are emitted once the watermark
-    proves no in-band right row can arrive — every emission must exist in
-    the batch left-outer answer, and null-matches must actually appear
-    (the outer path fires) for lefts older than the final watermark."""
-    from ohlc_spark_streaming_spark.streaming.joins import (
-        interval_join_left_outer,
-    )
-
-    def sides(df):
-        purchases = df.where(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("key_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        views = df.where(F.col("event_type") == "view").select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("key_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        return purchases, views
-
-    kw = dict(
-        key="key_id", left_ts="purchase_ts", right_ts="view_ts",
-        lookback="2 hours", watermark="1 hour",
-    )
-    sp, sv = sides(table_stream(spark, SF_SMOKE, "events"))
-    out = run_to_memory(
-        interval_join_left_outer(sp, sv, **kw)
-        .select("purchase_id", "view_id"),
-        output_mode="append",
-    )
-    bp, bv = sides(load_table(spark, SF_SMOKE, "events"))
-    batch = interval_join_left_outer(bp, bv, **kw).select(
-        "purchase_id", "view_id"
-    )
-
-    got = set(map(tuple, out.collect()))
-    want = set(map(tuple, batch.collect()))
-    assert got <= want
-    # Matched pairs are never watermark-withheld: exact equality.
-    assert {t for t in got if t[1] is not None} == {
-        t for t in want if t[1] is not None
-    }
-    # The outer path must actually fire.
-    assert any(t[1] is None for t in got)
 
 
 def test_streaming_full_outer_interval_join(spark):

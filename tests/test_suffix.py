@@ -327,3 +327,98 @@ def test_cross_contamination_progressive_path_matches_brute(spark):
     finally:
         SX.DISTRIBUTED_RANK_THRESHOLD = prev
     assert got == want
+
+
+def _mk_docs(spark, tmp_path, texts):
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    df.coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
+    return str(tmp_path)
+
+
+def _spans(spark, sf_dir):
+    out = registry.QUERIES["dedup_span_pow2"](spark, sf_dir).collect()
+    return {r.doc_id: (r.span_pow2, r.n_dup_at_max) for r in out}
+
+
+def test_span_pow2_planted(tmp_path, spark):
+    """Known-by-construction answers: a 40-token run shared across two
+    docs yields span 32 in both (a 32-window fits in the run, no
+    64-window repeats); a 16-token phrase repeated WITHIN one doc yields
+    16 (self-repeats count); an all-unique-token doc yields 0."""
+    shared = [f"s{i}" for i in range(40)]
+    doc_a = [f"a{i}" for i in range(15)] + shared + [f"z{i}" for i in range(15)]
+    doc_b = [f"b{i}" for i in range(10)] + shared + [f"y{i}" for i in range(10)]
+    phrase = [f"p{i}" for i in range(16)]
+    doc_c = phrase + ["sep0"] + phrase
+    doc_d = [f"u{i}" for i in range(30)]
+    sf = _mk_docs(
+        spark,
+        tmp_path,
+        [" ".join(doc_a), " ".join(doc_b), " ".join(doc_c), " ".join(doc_d)],
+    )
+    spans = _spans(spark, sf)
+    assert spans[0][0] == 32 and spans[1][0] == 32
+    # doc_a has 40-32+1 = 9 duplicated 32-windows (all inside the run)
+    assert spans[0][1] == 9 and spans[1][1] == 9
+    assert spans[2][0] == 16
+    assert spans[3] == (0, 0)
+
+
+def test_span_pow2_exact_copy_caps_at_doc_length(tmp_path, spark):
+    """Verbatim duplicate docs: span equals the largest level ≤ length;
+    a copy flood (3 identical docs) leaves the per-doc answer unchanged
+    (duplication COUNTS rise only at level boundaries — n_dup is the
+    window count, invariant to how many copies exist)."""
+    text = " ".join(f"t{i}" for i in range(70))
+    sf = _mk_docs(spark, tmp_path, [text, text, text])
+    spans = _spans(spark, sf)
+    # 70 tokens ≥ 64: whole-doc 64-windows are duplicated across copies
+    assert all(v[0] == 64 for v in spans.values())
+    assert all(v[1] == 70 - 64 + 1 for v in spans.values())
+
+
+def test_suffix_rank_pairing_matches_join_form(spark):
+    """lead(r, d) over (doc, pos) equals the old (doc, pos+d) self-join
+    with -1 fill — positions are dense 1..len per document."""
+    from ohlc_spark_streaming_spark.operators.suffix import (
+        global_dense_rank,
+        suffix_rank_tables,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b a b a"), (2, "b a b"), (3, "c")],
+        "doc_id long, text string",
+    )
+    toks = docs.select(
+        "doc_id", F.posexplode(F.split("text", " ")).alias("pos0", "token")
+    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "token")
+    tables = suffix_rank_tables(toks, 5)
+
+    # Reference: the old join pairing, one doubling step from level 1.
+    r1 = tables[0].df
+    nxt = r1.select(
+        F.col("doc_id").alias("n_doc"),
+        F.col("pos").alias("n_pos"),
+        F.col("r").alias("n_r"),
+    )
+    paired_ref = r1.join(
+        nxt,
+        (F.col("doc_id") == F.col("n_doc"))
+        & (F.col("pos") + F.lit(1) == F.col("n_pos")),
+        "left",
+    ).select(
+        "doc_id",
+        "pos",
+        F.col("r").alias("r1"),
+        F.coalesce(F.col("n_r"), F.lit(-1)).alias("r2"),
+    )
+    ref2 = global_dense_rank(paired_ref, ["r1", "r2"]).select(
+        "doc_id", "pos", F.col("gr").alias("r")
+    )
+    got = {
+        (r["doc_id"], r["pos"]): r["r"] for r in tables[1].df.collect()
+    }
+    want = {(r["doc_id"], r["pos"]): r["r"] for r in ref2.collect()}
+    assert got == want

@@ -9,7 +9,10 @@ query was linted and raised no such finding, or no query of that name is
 registered. A stale entry would silently exempt the query from the gate
 the day it regresses. Streaming twins are skipped: they run
 real micro-batches on call and carry no join hints (their state discipline
-is covered by tests/test_streaming*.py).
+is covered by tests/test_streaming*.py). Two source lints run first and
+fail the same way: CKPT_RAW/CONF_RAW (raw checkpoint or conf wiring
+outside its owner) and DEAD_DEF (a package definition nothing but tests
+calls).
 
 This is the round ritual complement to tools_scale_check.py: the scale
 sweep catches super-linear RUNTIME, this catches hazardous PLANS (the
@@ -19,7 +22,10 @@ VERDICT r5 item 3) the round they land.
 
 from __future__ import annotations
 
+import ast
+import collections
 import os
+import pathlib
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -130,7 +136,6 @@ CKPT_ALLOWED = {
     "streaming/checkpoints.py",
     "streaming/app.py",
     "sinks/kafka.py",
-    "sinks/files.py",
 }
 #: The one file allowed to name the checkpoint file manager conf.
 CKPT_MANAGER_OWNER = "streaming/checkpoints.py"
@@ -152,8 +157,6 @@ def lint_checkpoint_hygiene() -> list[tuple[str, str, str]]:
     error — a conf changed for a block goes through
     ``session.scoped_confs``, which restores it even when the block
     raises."""
-    import pathlib
-
     pkg = pathlib.Path(__file__).parent / "ohlc_spark_streaming_spark"
     bad: list[tuple[str, str, str]] = []
     for path in sorted(pkg.rglob("*.py")):
@@ -187,6 +190,97 @@ def lint_checkpoint_hygiene() -> list[tuple[str, str, str]]:
     return bad
 
 
+#: Package definitions that no engine code calls, each kept on purpose.
+#: An entry that gains a caller, or whose definition is gone, is stale.
+DEAD_DEF_ALLOWED = {
+    "kafka_stream_writer": "the paper's Kafka sink (reference main.py:208-216)",
+    "kafka_batch_reader": "the paper's Kafka source; the env-gated "
+    "live-broker test reads back with it",
+    "observed": "ROADMAP item 4 wires it into streaming/app.build_app",
+    "release_caches": "tests count the caches it releases",
+    "tws_interarrival_gaps": "the reference a test compares the registered "
+    "MapState variant against",
+    "OHLC_COLUMNS": "the candle output contract tests/test_ohlc.py asserts",
+    "TABLE_NAMES": "the tables tests/oracle_utils.py mounts in DuckDB; "
+    "perfbench/registry_mix.py and tools_verify.py check results through it",
+}
+
+
+def _top_level_defs(tree: ast.Module):
+    """(name, node) per top-level function, class and module constant,
+    except ``@register(...)`` queries (the registry is their caller)."""
+    for st in tree.body:
+        if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if not any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+                for d in st.decorator_list
+            ):
+                yield st.name, st
+        elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+            targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+            for t in targets:
+                for e in t.elts if isinstance(t, ast.Tuple) else [t]:
+                    if isinstance(e, ast.Name) and not e.id.startswith("__"):
+                        yield e.id, st
+
+
+def lint_dead_defs() -> list[tuple[str, str, str]]:
+    """Source lint (DEAD_DEF): a top-level package function, class or
+    module constant whose name is referenced nowhere outside its own
+    body is an error. References (names, attributes, imports) count
+    across the package, ``perfbench/``, ``bench.py``,
+    ``__spark_entry__.py`` and ``tools_*.py`` — not ``tests/``: code
+    that only its own tests call is weight, not engine. A stale
+    ``DEAD_DEF_ALLOWED`` entry is an error too."""
+    root = pathlib.Path(__file__).parent
+    pkg = root / "ohlc_spark_streaming_spark"
+    files = [
+        *pkg.rglob("*.py"),
+        *(root / "perfbench").rglob("*.py"),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+        *root.glob("tools_*.py"),
+    ]
+    defs: list[tuple[str, int, str]] = []
+    refs: collections.Counter[str] = collections.Counter()
+    for path in sorted(files):
+        tree = ast.parse(path.read_text())
+        own: dict[int, set[str]] = collections.defaultdict(set)
+        if pkg in path.parents:
+            for name, node in _top_level_defs(tree):
+                defs.append((path.relative_to(pkg).as_posix(), node.lineno, name))
+                for n in ast.walk(node):
+                    own[id(n)].add(name)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                ref = n.id
+            elif isinstance(n, ast.Attribute):
+                ref = n.attr
+            elif isinstance(n, ast.alias):
+                ref = n.name.rpartition(".")[2]
+            else:
+                continue
+            if ref not in own.get(id(n), ()):
+                refs[ref] += 1
+    bad = [
+        (rel, "DEAD_DEF", f"{rel}:{ln}: {name} has no caller outside tests")
+        for rel, ln, name in defs
+        if not refs[name] and name not in DEAD_DEF_ALLOWED
+    ]
+    defined = {name for _, _, name in defs}
+    bad += [
+        (
+            "tools_lint.py",
+            "DEAD_DEF",
+            f"stale DEAD_DEF_ALLOWED entry {name}: "
+            + ("it has a caller" if refs[name] else "no such definition"),
+        )
+        for name in sorted(DEAD_DEF_ALLOWED)
+        if refs[name] or name not in defined
+    ]
+    return bad
+
+
 def main() -> int:
     names = sys.argv[1:] or [
         n
@@ -200,7 +294,7 @@ def main() -> int:
     spark = build_session(app_name="engine-lint")
     bad: list[tuple[str, str, str]] = []
     fired: set[tuple[str, str]] = set()
-    for name, code, msg in lint_checkpoint_hygiene():
+    for name, code, msg in lint_checkpoint_hygiene() + lint_dead_defs():
         bad.append((name, code, msg))
         print(f"[lint] ERROR {name} {code}: {msg}")
     for i, name in enumerate(names, 1):
